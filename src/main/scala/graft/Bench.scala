@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 import graft.functions.TextOps
 
 /** Bench contract: reads the data dir from $SPARK_GRAFT_SF_DIR and the core
@@ -40,6 +41,23 @@ import graft.functions.TextOps
   *    same env contract and JSON output.
   */
 object Bench {
+  /** Seconds one noop-sink run of a query takes. A run that throws is
+    * reported on stderr (query name and error class) and recorded as
+    * `Double.MaxValue`: min-of-3 then never picks a failed run, and a query
+    * that always fails prints an obviously wrong time. Fatal errors
+    * (out of memory, interrupts) are not caught. */
+  def timedRun(spark: SparkSession, sfDir: String, name: String,
+               fn: (SparkSession, String) => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    } catch { case NonFatal(e) =>
+      Console.err.println(s"[bench] $name failed: ${e.getClass.getName}")
+      Double.MaxValue
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -77,15 +95,13 @@ object Bench {
       scala.collection.mutable.Map[String, List[Double]]().withDefaultValue(Nil)
     for (pass <- 1 to 3; (name, fn) <- queries) {
       spark.sparkContext.setJobDescription(s"bench:$name pass$pass")
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-      catch { case _: Throwable => () }
-      samples(name) = samples(name) :+ (System.nanoTime() - t0) / 1e9
+      samples(name) = samples(name) :+ timedRun(spark, sfDir, name, fn)
     }
     val results = queries.map { case (name, _) => name -> samples(name).min }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    // Capped so that two failed queries still print a JSON number, not Infinity.
+    val total = math.min(results.map(_._2).sum, Double.MaxValue)
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}""")
     spark.stop()
   }

@@ -93,8 +93,9 @@ object TextOps {
     * (app.py:48-50): a mention glued to a URL ("@xhttp://y") is consumed
     * mention-first here, whereas the reference strips the URL in its own
     * earlier pass. Only adversarial inputs with no whitespace between a
-    * mention and a URL differ; the oracle SQL uses the identical fused
-    * pattern, so both sides of every correctness check share the semantics.
+    * mention and a URL differ. The oracle SQL does not share this pattern:
+    * it runs the reference's three sequential passes ([[normalizeSqlExpr]]),
+    * so such inputs show up as oracle mismatches.
     */
   val CleanRe = s"$UrlReFused|$MentionRe|$NonAlphaRe"
 
@@ -172,9 +173,11 @@ object TextOps {
        |  FROM documents""".stripMargin
 
   /** SQL twin of [[cleanText]] as a scalar expression over column `text`
-    * (DuckDB list lambda mirrors Spark's higher-order `filter`). */
+    * (DuckDB list lambda mirrors Spark's higher-order `filter`). NULL only
+    * for NULL `text`: DuckDB 1.0's `array_to_string([], ' ')` is NULL, where
+    * the reference's `" ".join([])` and [[cleanText]] give "". */
   val cleanTextSqlExpr: String =
-    s"""array_to_string(list_filter(string_split_regex($normalizeSqlExpr,
-       |  '$WsRe'),
-       |  w -> length(w) > 2 AND w NOT IN ($stopwordsSqlList)), ' ')""".stripMargin
+    s"""CASE WHEN text IS NULL THEN NULL ELSE coalesce(array_to_string(
+       |  list_filter(string_split_regex($normalizeSqlExpr, '$WsRe'),
+       |  w -> length(w) > 2 AND w NOT IN ($stopwordsSqlList)), ' '), '') END""".stripMargin
 }

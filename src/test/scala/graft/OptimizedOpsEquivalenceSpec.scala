@@ -1,6 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,11 +15,12 @@ import org.scalatest.BeforeAndAfterAll
 import graft.functions.TextOps
 import graft.operators.{CorpusOps, TfIdfOps}
 
-/** Round-21 optimization equivalence tests: every operator whose internals
+/** Optimization equivalence tests: every operator or query whose internals
   * were restructured for performance is checked row-for-row against the
   * straightforward (pre-optimization) formulation on a corpus of edge
   * cases — boundary whitespace (empty split tokens), stopword-only docs,
-  * URLs/mentions, uppercase, empty strings, duplicate texts.
+  * URLs/mentions, uppercase, empty and NULL strings, duplicate texts — and
+  * the plan shapes the restructurings rely on are pinned.
   */
 class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -28,7 +36,12 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("WARN")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  private val dataDir: Path = Files.createTempDirectory("edge-docs")
+
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    Files.walk(dataDir).sorted(Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+  }
 
   private def docs: DataFrame = {
     val rows = Seq(
@@ -46,10 +59,36 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       // https-heavy rows for the dead-branch claim (UrlReFused == UrlRe):
       (12L, "secure https://secure.example.com/path?q=1 gets stripped", "en"),
       (13L, "glued xhttps://y and bare https and httpsonly token", "en"),
-      (14L, "https://a https://b www.c.org http://d.e mixed urls", "en")
+      (14L, "https://a https://b www.c.org http://d.e mixed urls", "en"),
+      (15L, null, "und")                                         // NULL text
     )
     spark.createDataFrame(rows).toDF("doc_id", "text", "lang")
       .withColumn("n_chars", length(col("text")))
+  }
+
+  /** [[docs]] as a `documents` table of several parquet files, so that a
+    * scan yields more than one partition. Returns the table's directory. */
+  private lazy val docsParquet: String = {
+    docs.select(col("doc_id"), col("text"), col("lang"),
+        concat(lit("src"), col("doc_id") % 3).as("source"),
+        col("n_chars").cast("long").as("n_chars"))
+      .repartition(3).write.parquet(s"$dataDir/documents.parquet")
+    dataDir.toString
+  }
+
+  /** Every physical operator of an executed plan, through AQE query stages;
+    * a reused exchange counts once, as itself. */
+  private def operators(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => operators(a.executedPlan)
+    case s: QueryStageExec => operators(s.plan)
+    case r: ReusedExchangeExec => Seq(r)
+    case other => other +: (other.children ++ other.subqueries).flatMap(operators)
+  }
+
+  /** The final (post-AQE) operators of `df`, after running it. */
+  private def executedOperators(df: DataFrame): Seq[SparkPlan] = {
+    df.collect() // runs df's own QueryExecution, so its adaptive plan is final
+    operators(df.queryExecution.executedPlan)
   }
 
   private def collectSorted(df: DataFrame): Seq[String] =
@@ -174,5 +213,56 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // "" -> one group, survivor min = 2, dup_cnt 3
     assert(out(2L) === 3L)
     assert(!out.contains(9L) && !out.contains(6L) && !out.contains(7L))
+  }
+
+  test("SparkEntry.queries == operator-then-orderBy over the inferred schema, in order") {
+    val inferred = spark.read.parquet(s"$docsParquet/documents.parquet")
+    val operatorThenSort: Map[String, DataFrame] = Map(
+      "word_freq_top20" -> TextOps.wordFreq(inferred, 20),
+      "word_freq_top200" -> TextOps.wordFreq(inferred, 200),
+      "clean_text" -> CorpusOps.cleanTexts(inferred).orderBy("doc_id"),
+      "word_count" -> CorpusOps.wordCounts(inferred).orderBy("doc_id"),
+      "keyword_filter" -> CorpusOps.keywordFilter(inferred).orderBy("doc_id"),
+      "doc_stats" -> CorpusOps.docStats(inferred).orderBy("doc_id"),
+      "lang_dist" -> CorpusOps.langDist(inferred).orderBy("lang"),
+      "doc_fingerprint" -> CorpusOps.fingerprints(inferred).orderBy("doc_id"),
+      "dedup_exact" -> CorpusOps.dedupExact(inferred).orderBy("keep_id"),
+      "term_doc_freq" -> TfIdfOps.termDocFreq(inferred).orderBy("doc_id", "term"))
+    assert(SparkEntry.queries.keySet === operatorThenSort.keySet)
+    for ((name, fn) <- SparkEntry.queries) {
+      val edge = fn(spark, docsParquet)
+      val reference = operatorThenSort(name)
+      assert(edge.schema === reference.schema, name)
+      assert(edge.collect().toSeq === reference.collect().toSeq, name)
+    }
+    // the corpus really reaches the edge cases: "" and NULL clean_text rows
+    val clean = SparkEntry.queries("clean_text")(spark, docsParquet).collect()
+    assert(clean.exists(r => r.getString(1) == "") && clean.exists(_.isNullAt(1)))
+  }
+
+  test("per-doc queries sort their (doc_id, text) input: no regex under the range exchange") {
+    for (name <- Seq("clean_text", "word_count", "doc_stats", "doc_fingerprint")) {
+      val rangeExchanges = executedOperators(SparkEntry.queries(name)(spark, docsParquet))
+        .collect { case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[RangePartitioning] => e }
+      assert(rangeExchanges.size === 1, name)
+      val child = rangeExchanges.head.child
+      assert(!operators(child).flatMap(_.expressions)
+        .exists(_.exists(_.isInstanceOf[RegExpReplace])), name)
+      assert(child.output.map(_.name) === Seq("doc_id", "text"), name)
+    }
+  }
+
+  test("declared documents schema == the schema Spark infers from the fixture") {
+    assert(SparkEntry.DocumentsSchema ===
+      spark.read.parquet("/root/testdata/sf0.001/documents.parquet").schema)
+  }
+
+  test("termDocFreq executes one scan and one Generate (exchange reuse)") {
+    val ops = executedOperators(
+      TfIdfOps.termDocFreq(spark.read.parquet(s"$docsParquet/documents.parquet")))
+    assert(ops.count(_.isInstanceOf[FileSourceScanExec]) === 1)
+    assert(ops.count(_.isInstanceOf[GenerateExec]) === 1)
+    assert(ops.exists(_.isInstanceOf[ReusedExchangeExec]))
   }
 }
