@@ -46,13 +46,12 @@ object Profile {
     val CleanReNoHttps = s"${"http[^" + TextOps.WsClass + "]+|www[^" + TextOps.WsClass + "]+"}|${TextOps.MentionRe}|${TextOps.NonAlphaRe}"
 
     time("scan_only")(docs.select("doc_id", "text"))
-    time("normalize_fused")(docs.select(TextOps.normalize(text).as("t")))
     time("normalize_no_https_branch")(docs.select(regexp_replace(lower(text), CleanReNoHttps, "").as("t")))
     time("normalize_seq3")(docs.select(
       regexp_replace(regexp_replace(regexp_replace(lower(text),
         TextOps.UrlRe, ""), TextOps.MentionRe, ""), TextOps.NonAlphaRe, "").as("t")))
     time("split_only")(docs.select(split(TextOps.normalize(text), TextOps.WsRe).as("t")))
-    time("clean_tokens_2hof")(docs.select(TextOps.cleanTokens(text).as("t")))
+    time("clean_tokens_kernel")(docs.select(TextOps.cleanTokens(text).as("t")))
     time("clean_tokens_1hof")(docs.select(
       filter(split(TextOps.normalize(text), TextOps.WsRe),
         (t: Column) => length(t) > 2 && !t.isin(TextOps.NltkStopwords: _*)).as("t")))

@@ -32,10 +32,13 @@ object ProfileAB {
       .repartition(cpus.toInt * 2)
 
     val text = col("text")
-    // the pre-r21 3-branch fused pattern (TextOps.CleanRe is now the
-    // 2-branch UrlReFused form; see TextOps.UrlReFused's dead-branch proof)
+    // the r21-r22 fused clean patterns: the pre-r21 3-branch form and the
+    // 2-branch form without the dead https branch (the engine now runs the
+    // TextOps.cleanLowered kernel instead of either)
     val CleanRe3 =
       s"${TextOps.UrlRe}|${TextOps.MentionRe}|${TextOps.NonAlphaRe}"
+    val UrlRe2 = s"http[^${TextOps.WsClass}]+|www[^${TextOps.WsClass}]+"
+    val CleanRe2 = s"$UrlRe2|${TextOps.MentionRe}|${TextOps.NonAlphaRe}"
 
     // the pre-r21 single-Project doc_stats shape (CorpusOps.docStats is now
     // the two-level projection; this is the rejected-then-overturned baseline)
@@ -132,28 +135,29 @@ object ProfileAB {
     val only = sys.env.get("SPARK_GRAFT_PROFILE_ONLY").map(_.split(",").toSeq)
     val allVariants: Seq[(String, DataFrame)] = Seq(
       "normalize_fused3" -> docs.select(regexp_replace(lower(text), CleanRe3, "").as("t")),
-      "normalize_nohttps" -> docs.select(TextOps.normalize(text).as("t")),
+      "normalize_nohttps" -> docs.select(regexp_replace(lower(text), CleanRe2, "").as("t")),
       "clean_text_fused3" -> docs.select(array_join(
         filter(split(regexp_replace(lower(text), CleanRe3, ""), TextOps.WsRe),
           (t: Column) => TextOps.keepToken(t)), " ").as("t")),
-      "clean_text_nohttps" -> docs.select(TextOps.cleanText(text).as("t")),
+      "clean_text_nohttps" -> docs.select(array_join(
+        filter(split(regexp_replace(lower(text), CleanRe2, ""), TextOps.WsRe),
+          (t: Column) => TextOps.keepToken(t)), " ").as("t")),
       "doc_stats_single" -> docStatsSingle(docs),
       "doc_stats_two_level" -> docStatsTwoLevel(docs),
-      // cost decomposition of the token pipeline: the delta tok_c - tok_b
-      // is the interpreted HOF filter+INSET (the engine's remaining
-      // non-codegen hot-path expression per OPTIMIZATION_r21.md)
+      // token pipeline: tok_a/tok_b are the three-pass regex prefixes,
+      // tok_c the cleanLowered kernel, which does not extend them
       "tok_a_normalize" -> docs.select(TextOps.normalize(text).as("t")),
       "tok_b_split" -> docs.select(split(TextOps.normalize(text), TextOps.WsRe).as("t")),
       "tok_c_filter" -> docs.select(TextOps.cleanTokens(text).as("t")),
       // normalize-regex micro-variants (all must be result-identical):
       "norm_lower_only" -> docs.select(lower(text).as("t")),
-      "norm_current" -> docs.select(TextOps.normalize(text).as("t")),
+      "norm_fused2" -> docs.select(regexp_replace(lower(text), CleanRe2, "").as("t")),
       // non-alpha class quantified to consume runs in ONE match; '@' is
       // excluded from the class (else a greedy run could swallow the '@'
       // a following mention needs, e.g. "1@abc") and handled by a lone-@
       // fallback branch, preserving branch priority exactly
       "norm_runs" -> docs.select(regexp_replace(lower(text),
-        s"${TextOps.UrlReFused}|${TextOps.MentionRe}|[^a-z${TextOps.WsClass}@]+|@", "").as("t")),
+        s"$UrlRe2|${TextOps.MentionRe}|[^a-z${TextOps.WsClass}@]+|@", "").as("t")),
       // http|www grouped into one alternative
       "norm_grouped" -> docs.select(regexp_replace(lower(text),
         s"(?:http|www)[^${TextOps.WsClass}]+|${TextOps.MentionRe}|${TextOps.NonAlphaRe}", "").as("t")),

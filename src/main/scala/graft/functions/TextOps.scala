@@ -1,23 +1,28 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.sql.{Column, DataFrame, ExpressionBridge}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-cleaning + corpus-statistics pipeline, rebuilt Spark-first.
   *
   * Semantics mirror the reference's `clean_text` + frequency analytics
-  * (/root/reference/app.py:46-57, 168-169): lowercase, URL strip,
-  * @mention strip, non-alpha strip, whitespace tokenize, NLTK-stopword +
-  * len>2 token filter, re-join, and global word frequency top-K.
+  * (app.py:46-57, 168-169): lowercase, URL strip, @mention strip,
+  * non-alpha strip, whitespace tokenize, NLTK-stopword + len>2 token
+  * filter, re-join, and global word frequency top-K.
   *
-  * Everything here is composed from `org.apache.spark.sql.functions`
-  * built-ins (codegen'd Catalyst expressions — no UDFs), so the whole
-  * P1–P8 chain fuses into one WholeStageCodegen stage and the derived
-  * columns push through the parquet scan with column pruning (only
-  * `text` is read). The lemmatizer (app.py:54) is deliberately NOT part
-  * of these oracle-checked paths: WordNet morphy is not SQL-expressible,
-  * so its implementation lives outside this object and is golden-tested
-  * instead of DuckDB-oracle-checked.
+  * Everything is a codegen'd Catalyst expression (no UDFs), so each query's
+  * chain fuses into one WholeStageCodegen stage and the scan prunes to
+  * `text`. The clean chain itself is one `StaticInvoke` of the byte kernel
+  * [[cleanLowered]] over Spark's own `lower(text)`; everything else is
+  * composed from `org.apache.spark.sql.functions` built-ins. The lemmatizer
+  * (app.py:54) is deliberately NOT part of these oracle-checked paths:
+  * WordNet morphy is not SQL-expressible, so its implementation lives
+  * outside this object and is golden-tested instead of DuckDB-oracle-checked.
   */
 object TextOps {
 
@@ -71,49 +76,18 @@ object TextOps {
   val NonAlphaRe = s"[^a-z$WsClass]"
   val WsRe = s"[$WsClass]+"
 
-  /** [[UrlRe]] minus its `https[^\s]+` branch, which is DEAD: any position
-    * where `https[^\s]+` can match starts with "http" followed by the
-    * non-whitespace "s…", so the earlier `http[^\s]+` branch already matches
-    * there, leftmost-first, with the same greedy span — the third branch can
-    * never be reached. The engine's fused pattern uses this 2-branch form
-    * (one less alternative tried at every non-matching scan position); the
-    * oracle keeps the reference-verbatim 3-branch [[UrlRe]] (app.py:48), so
-    * the dead-branch claim is itself checked by every DuckDB hash compare.
-    * Pinned equal to the 3-branch form on https-heavy edge cases in
-    * OptimizedOpsEquivalenceSpec. */
-  val UrlReFused = s"http[^$WsClass]+|www[^$WsClass]+"
-
-  /** P2–P4 fused into ONE alternation so the string is scanned once instead
-    * of three times (the normalize chain dominates the fingerprint/dedup
-    * family's cost — it runs per document on the full raw text). Branch
-    * order preserves the sequential chain's priority at any given start
-    * position (URL > mention > single non-alpha char); both Java regex and
-    * DuckDB's RE2 are leftmost-first, so the two engines agree. Known
-    * deviation from the reference's three sequential `re.sub` passes
-    * (app.py:48-50): a mention glued to a URL ("@xhttp://y") is consumed
-    * mention-first here, whereas the reference strips the URL in its own
-    * earlier pass. Only adversarial inputs with no whitespace between a
-    * mention and a URL differ. The oracle SQL does not share this pattern:
-    * it runs the reference's three sequential passes ([[normalizeSqlExpr]]),
-    * so such inputs show up as oracle mismatches.
-    */
-  val CleanRe = s"$UrlReFused|$MentionRe|$NonAlphaRe"
-
-  /** P1–P4: lowercase, then fused URL/@mention/non-alpha strip. */
+  /** P1–P4 as the reference's three sequential passes (app.py:48-50):
+    * lowercase, then URL strip, then mention strip, then non-alpha strip.
+    * The same chain as [[normalizeSqlExpr]] and as the [[cleanLowered]]
+    * kernel; the engine's queries use the kernel, not this. */
   def normalize(c: Column): Column =
-    regexp_replace(lower(c), CleanRe, "")
+    regexp_replace(regexp_replace(regexp_replace(lower(c),
+      UrlRe, ""), MentionRe, ""), NonAlphaRe, "")
 
-  /** SQL twin of [[normalize]] over column `text`.
-    *
-    * Deliberately NOT the fused [[CleanRe]] pattern: the oracle side uses
-    * the reference's sequential three-pass chain (app.py:48-50, URL strip
-    * then mention strip then non-alpha strip) so that engine and oracle no
-    * longer share one regex constant — a fused-pattern bug on the Spark
-    * side is now detectable by the DuckDB hash compare. Fused and
-    * sequential semantics only diverge on adversarial glued mention+URL
-    * text (see [[CleanRe]]'s doc); verified identical on every row of
-    * sf0.001/0.01/0.1 before the switch.
-    */
+  /** SQL twin of [[normalize]] over column `text`: the same three
+    * sequential passes. The engine computes this chain with the
+    * [[cleanLowered]] kernel, not with these regexes, so the DuckDB hash
+    * compare checks the kernel against an independent implementation. */
   val normalizeSqlExpr: String =
     s"regexp_replace(regexp_replace(regexp_replace(lower(text), " +
       s"'$UrlRe', '', 'g'), '$MentionRe', '', 'g'), '$NonAlphaRe', '', 'g')"
@@ -127,16 +101,89 @@ object TextOps {
   def keepToken(t: Column): Column =
     length(t) > 2 && !t.isin(NltkStopwords: _*)
 
-  /** Full cleaned token array for a raw-text column.
-    *
-    * Single higher-order filter: [[keepToken]]'s `length > 2` already
-    * rejects the empty boundary tokens that [[tokenize]]'s own filter
-    * exists to drop, so composing the two filters would materialize an
-    * intermediate array and run a second interpreted lambda pass (HOFs are
-    * CodegenFallback) for no semantic gain. Same result, one pass.
-    */
+  /** Full cleaned token array for a raw-text column: [[cleanLowered]]
+    * over Spark's own `lower`, as one codegen'd `StaticInvoke` (no UDF, no
+    * Java-string round trip, no interpreted lambda). NULL in, NULL out. */
   def cleanTokens(c: Column): Column =
-    filter(split(normalize(c), WsRe), (t: Column) => keepToken(t))
+    ExpressionBridge.column(StaticInvoke(getClass,
+      ArrayType(StringType, containsNull = false), "cleanLowered",
+      Seq(ExpressionBridge.expression(lower(c))), returnNullable = false))
+
+  private val Stopwords = new java.util.HashSet[UTF8String]()
+  NltkStopwords.foreach(w => Stopwords.add(UTF8String.fromString(w)))
+
+  private def isWs(b: Byte): Boolean =
+    b == ' ' || b == '\t' || b == '\n' || b == '\f' || b == '\r'
+
+  private def isWord(b: Byte): Boolean = // ASCII \w, as in Java and RE2
+    (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9') || b == '_'
+
+  /** The clean chain on the UTF-8 bytes of already-lowered text. The result
+    * is exactly `filter(split(p, WsRe), keepToken)`, where `p` is the
+    * lowered text after the three regex passes of [[normalize]].
+    *
+    * Pass 1 removes [[UrlRe]] leftmost-first and greedily into a scratch
+    * array (its `https` branch can never match where `http` does not).
+    * Pass 2 scans that once: it skips each [[MentionRe]] match, drops every
+    * byte outside [[NonAlphaRe]]'s complement, splits on whitespace runs and
+    * keeps each token longer than 2 that is not a stopword. Bytes are exact
+    * here: ASCII bytes never occur inside a multi-byte UTF-8 sequence, every
+    * pattern literal and class member is ASCII, and every non-ASCII
+    * character is neither whitespace nor a letter in `[a-z]`.
+    */
+  def cleanLowered(lowered: UTF8String): ArrayData = {
+    val in = lowered.getBytes
+    val n = in.length
+    val buf = new Array[Byte](n)
+    var len = 0
+    var i = 0
+    while (i < n) {
+      val prefix =
+        if (i + 4 < n && in(i) == 'h' && in(i + 1) == 't' && in(i + 2) == 't' &&
+            in(i + 3) == 'p') 4
+        else if (i + 3 < n && in(i) == 'w' && in(i + 1) == 'w' && in(i + 2) == 'w') 3
+        else 0
+      if (prefix > 0 && !isWs(in(i + prefix))) {
+        i += prefix + 1
+        while (i < n && !isWs(in(i))) i += 1
+      } else {
+        buf(len) = in(i)
+        len += 1
+        i += 1
+      }
+    }
+    // Pass 2 compacts the current token's letters in place at
+    // buf(start until w); w never passes the read index r. A kept token is
+    // a view of its bytes (fromBytes does not copy), so the next token
+    // starts after it.
+    val out = ArrayBuffer.empty[Any]
+    var start = 0
+    var w = 0
+    var r = 0
+    while (r <= len) {
+      if (r == len || isWs(buf(r))) {
+        if (w - start > 2) {
+          val token = UTF8String.fromBytes(buf, start, w - start)
+          if (!Stopwords.contains(token)) {
+            out += token
+            start = w
+          }
+        }
+        w = start
+        r += 1
+      } else if (buf(r) == '@' && r + 1 < len && isWord(buf(r + 1))) {
+        r += 2
+        while (r < len && isWord(buf(r))) r += 1
+      } else {
+        if (buf(r) >= 'a' && buf(r) <= 'z') {
+          buf(w) = buf(r)
+          w += 1
+        }
+        r += 1
+      }
+    }
+    new GenericArrayData(out.toArray)
+  }
 
   /** P7: the reference's clean_text output (sans lemmatizer — see class doc). */
   def cleanText(c: Column): Column = array_join(cleanTokens(c), " ")

@@ -7,42 +7,18 @@ import graft.functions.TextOps
 /** A2+A3: per-doc term frequency joined with per-term document
   * frequency (app.py:156-157) — the relational spine of TF-IDF.
   * One scan + one explode + one hash aggregate, then a vocabulary-sized
-  * per-term count broadcast-joined back; no UDFs, no driver-side work. */
+  * per-term count joined back; no UDFs, no driver-side work. */
 object TfIdfOps {
   def termDocFreq(docs: DataFrame): DataFrame = {
     val toks = docs.select(col("doc_id"),
       explode(TextOps.cleanTokens(col("text"))).as("term"))
     val tf = toks.groupBy("doc_id", "term")
       .agg(count(lit(1)).as("tf"))
-    // df derived from tf, not from a second aggregation of the raw token
-    // stream: tf's output rows are already distinct (doc_id, term) pairs,
-    // so rows-per-term equals countDistinct(doc_id).
-    //
-    // Shape history (see OPTIMIZATION_r21/r22.md):
-    //  - r19 shipped tf ⋈ toks.groupBy(term).agg(countDistinct(doc_id)):
-    //    2 parquet scans, 2 Generates — the whole scan+regex+explode ran
-    //    twice (no exchange reuse: the df branch optimized into a distinct
-    //    aggregate whose exchange no longer matched tf's).
-    //  - r21 shipped count(1) over (partition by term): ONE scan, but the
-    //    window puts ALL tf rows of a term into ONE task's sort partition —
-    //    an unsplittable straggler for hot terms at corpus scale (AQE can
-    //    split skewed join partitions, never window partitions).
-    //  - r22 (this shape): df = per-term count of tf rows, broadcast-joined
-    //    back. count(when(tf > 0, 1)) — provably count(*) since tf >= 1 —
-    //    deliberately references tf so RemoveRedundantAggregates cannot
-    //    prune the lower aggregate into the countDistinct shape that broke
-    //    exchange reuse in r19. AQE stage reuse then dedups the two
-    //    identical hash(doc_id, term) exchanges: the final plan (verified,
-    //    plans/r22/term_doc_freq_after.txt) keeps ONE scan + ONE Generate,
-    //    the df branch reads the tf shuffle via ReusedExchange, map-side
-    //    partial counts shrink the per-term exchange to vocabulary size,
-    //    and the join is a BroadcastHashJoin probe — no Window, no per-term
-    //    sort, no skew exposure. The broadcast side is (term, df) — bounded
-    //    by vocabulary size, far under the 8 GB broadcast cap for any real
-    //    corpus vocabulary.
+    // df = tf rows per term; count(when(tf > 0, 1)) is count(*) that keeps
+    // AQE's exchange reuse, hence one scan (OPTIMIZATION_r22.md).
     val dfreq = tf.groupBy("term")
       .agg(count(when(col("tf") > 0, 1)).as("df"))
-    tf.join(broadcast(dfreq), "term")
+    tf.join(dfreq, "term")
       .select("doc_id", "term", "tf", "df")
   }
 

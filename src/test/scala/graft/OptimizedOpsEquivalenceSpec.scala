@@ -3,13 +3,17 @@ package graft
 import java.nio.file.{Files, Path}
 import java.util.Comparator
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, Expression, RegExpReplace, StringSplit}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.functions.TextOps
@@ -19,8 +23,9 @@ import graft.operators.{CorpusOps, TfIdfOps}
   * were restructured for performance is checked row-for-row against the
   * straightforward (pre-optimization) formulation on a corpus of edge
   * cases — boundary whitespace (empty split tokens), stopword-only docs,
-  * URLs/mentions, uppercase, empty and NULL strings, duplicate texts — and
-  * the plan shapes the restructurings rely on are pinned.
+  * URLs/mentions (also glued together), uppercase, non-ASCII letters, emoji,
+  * \u000B/NBSP, empty and NULL strings, duplicate texts — and the plan
+  * shapes the restructurings rely on are pinned.
   */
 class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -60,7 +65,19 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       (12L, "secure https://secure.example.com/path?q=1 gets stripped", "en"),
       (13L, "glued xhttps://y and bare https and httpsonly token", "en"),
       (14L, "https://a https://b www.c.org http://d.e mixed urls", "en"),
-      (15L, null, "und")                                         // NULL text
+      (15L, null, "und"),                                        // NULL text
+      // the reference strips URLs before mentions: "glued@x" -> "glued"
+      (16L, "glued@xhttp://y.z", "en"),
+      (17L, "HTTP://UPPER.CASE/x survives lowercase first", "en"),
+      (18L, "mail email@domain.com today", "en"),
+      (19L, "lone @ sign and @@x double", "en"),
+      (20L, "café naïve façade", "fr"),
+      // \u000B and NBSP are not separators: they are dropped and glue words
+      (21L, "vertical\u000Btab and\u00A0nbsp joined", "en"),
+      (22L, "emoji \uD83D\uDE00 between\uD83C\uDF89words", "en"),
+      // Kelvin sign and dotted capital I lowercase to ASCII k and i (plus a
+      // combining dot, which the non-alpha strip drops)
+      (23L, "\u212Aelvin \u0130stanbul", "tr")
     )
     spark.createDataFrame(rows).toDF("doc_id", "text", "lang")
       .withColumn("n_chars", length(col("text")))
@@ -91,6 +108,22 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     operators(df.queryExecution.executedPlan)
   }
 
+  private def isKernel(e: Expression): Boolean = e match {
+    case s: StaticInvoke => s.functionName == "cleanLowered"
+    case _ => false
+  }
+
+  /** Whether any operator of `ops` has an expression with a node matching `p`. */
+  private def anyExpression(ops: Seq[SparkPlan])(p: Expression => Boolean): Boolean =
+    ops.flatMap(_.expressions).exists(_.exists(p))
+
+  /** The reference's clean chain, one step per built-in: the three regex
+    * passes of the oracle's normalizeSqlExpr, then split and keepToken. */
+  private def threePassTokens(text: Column): Column =
+    filter(split(regexp_replace(regexp_replace(regexp_replace(lower(text),
+      TextOps.UrlRe, ""), TextOps.MentionRe, ""), TextOps.NonAlphaRe, ""),
+      TextOps.WsRe), (t: Column) => TextOps.keepToken(t))
+
   private def collectSorted(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
@@ -113,17 +146,73 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(toks.nonEmpty && toks.forall(_.nonEmpty))
   }
 
-  test("2-branch fused clean regex == 3-branch (https branch is dead)") {
-    // The engine's CleanRe uses UrlReFused (http|www); the https branch of
-    // the reference-verbatim UrlRe can never match where http[^\s]+ doesn't
-    // match first, leftmost-first, with the same greedy span.
-    val fused3 = docs.select(col("doc_id"), regexp_replace(lower(col("text")),
-      s"${TextOps.UrlRe}|${TextOps.MentionRe}|${TextOps.NonAlphaRe}", "").as("t"))
-    val fused2 = docs.select(col("doc_id"), TextOps.normalize(col("text")).as("t"))
-    assertSameResult(fused2, fused3)
+  test("cleanTokens kernel == three-pass UrlRe on the https rows") {
+    // UrlRe keeps the reference's https branch; the kernel's URL pass has
+    // only http and www, since https can match only where http already does
+    val https = docs.where(col("doc_id").between(12L, 14L))
+    assertSameResult(
+      https.select(col("doc_id"), TextOps.cleanTokens(col("text")).as("t")),
+      https.select(col("doc_id"), threePassTokens(col("text")).as("t")))
     // and the https rows really exercise URL stripping
-    val t12 = fused2.where(col("doc_id") === 12L).collect()(0).getString(1)
-    assert(!t12.contains("secureexamplecom") && t12.contains("secure"))
+    val t12 = https.where(col("doc_id") === 12L)
+      .select(TextOps.cleanTokens(col("text"))).head().getSeq[String](0)
+    assert(t12 === Seq("secure", "gets", "stripped"))
+  }
+
+  test("cleanTokens kernel == sequential three-pass regex, split and keepToken") {
+    assertSameResult(
+      docs.select(col("doc_id"), TextOps.cleanTokens(col("text")).as("t")),
+      docs.select(col("doc_id"), threePassTokens(col("text")).as("t")))
+    assertSameResult(
+      docs.select(col("doc_id"), TextOps.normalize(col("text")).as("t")),
+      docs.select(col("doc_id"), regexp_replace(regexp_replace(regexp_replace(
+        lower(col("text")), TextOps.UrlRe, ""), TextOps.MentionRe, ""),
+        TextOps.NonAlphaRe, "").as("t")))
+    val cleaned = docs.select(col("doc_id"), TextOps.cleanText(col("text")))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    // the interpreted path (no codegen) finds and calls the same kernel
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try {
+      assert(docs.select(col("doc_id"), TextOps.cleanText(col("text")))
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap === cleaned)
+    } finally {
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+    }
+    assert(cleaned(15L) === null)
+    assert(cleaned(16L) === "glued")
+    assert(cleaned(17L) === "survives lowercase first")
+    assert(cleaned(18L) === "mail emailcom today")
+    assert(cleaned(19L) === "lone sign double")
+    assert(cleaned(20L) === "caf nave faade")
+    assert(cleaned(21L) === "verticaltab andnbsp joined")
+    assert(cleaned(22L) === "emoji betweenwords")
+    assert(cleaned(23L) === "kelvin istanbul")
+  }
+
+  test("cleanTokens kernel == three-pass formulation on 5,000 seeded generated strings") {
+    // heavy in the bytes the URL, mention and whitespace rules look at
+    val unit = Gen.frequency(
+      16 -> Gen.oneOf("h", "t", "p", "w", "@", "_", ":", "/", ".", " ", "\t",
+        "\u000B", "s", "a", "x", "1"),
+      4 -> Gen.oneOf("http", "www", "https://", "the", "and", "\n", "\f", "\r", "  "),
+      3 -> Gen.oneOf("H", "T", "P", "W", "S", "@X"),
+      2 -> Gen.oneOf("é", "ï", "É", "ß", "\u00A0", "\u212A", "\u0130"),
+      1 -> Gen.oneOf("\uD83D\uDE00", "\uD83C\uDF89"))
+    val text = Gen.choose(0, 40).flatMap(n => Gen.listOfN(n, unit).map(_.mkString))
+    val texts = Gen.listOfN(5000, text).pureApply(Gen.Parameters.default, Seed(20261017L))
+    val generated = spark.createDataFrame(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) })
+      .toDF("id", "text")
+    val rows = generated.select(col("text"), TextOps.cleanTokens(col("text")),
+      threePassTokens(col("text"))).collect()
+    val mismatches = rows.filter(r => r.getSeq[String](1) != r.getSeq[String](2))
+    assert(mismatches.isEmpty,
+      mismatches.take(5).map(r => s"${r.getString(0).map(c => f"\\u${c.toInt}%04x").mkString}: " +
+        s"kernel ${r.getSeq[String](1)} != three-pass ${r.getSeq[String](2)}").mkString("\n"))
+    // the corpus reaches the kernel's branches: URLs, mentions, kept tokens
+    assert(texts.count(_.toLowerCase.contains("http")) > 500)
+    assert(rows.count(_.getSeq[String](1).nonEmpty) > 500)
   }
 
   test("wordCounts Generate-barrier == plain select+filter formulation") {
@@ -242,14 +331,26 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("per-doc queries sort their (doc_id, text) input: no regex under the range exchange") {
     for (name <- Seq("clean_text", "word_count", "doc_stats", "doc_fingerprint")) {
-      val rangeExchanges = executedOperators(SparkEntry.queries(name)(spark, docsParquet))
+      val ops = executedOperators(SparkEntry.queries(name)(spark, docsParquet))
+      // the kernel runs, above the exchange (doc_stats has no clean step)
+      assert(anyExpression(ops)(isKernel) === (name != "doc_stats"), name)
+      val rangeExchanges = ops
         .collect { case e: ShuffleExchangeExec
           if e.outputPartitioning.isInstanceOf[RangePartitioning] => e }
       assert(rangeExchanges.size === 1, name)
       val child = rangeExchanges.head.child
-      assert(!operators(child).flatMap(_.expressions)
-        .exists(_.exists(_.isInstanceOf[RegExpReplace])), name)
+      assert(!anyExpression(operators(child))(_.isInstanceOf[RegExpReplace]), name)
+      assert(!anyExpression(operators(child))(isKernel), name)
       assert(child.output.map(_.name) === Seq("doc_id", "text"), name)
+    }
+  }
+
+  test("clean-chain queries run the kernel: no ArrayFilter, StringSplit or RegExpReplace") {
+    for (name <- Seq("clean_text", "word_freq_top200", "term_doc_freq", "dedup_exact")) {
+      val ops = executedOperators(SparkEntry.queries(name)(spark, docsParquet))
+      assert(anyExpression(ops)(isKernel), name)
+      assert(!anyExpression(ops)(e => e.isInstanceOf[ArrayFilter] ||
+        e.isInstanceOf[StringSplit] || e.isInstanceOf[RegExpReplace]), name)
     }
   }
 
@@ -259,8 +360,9 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("termDocFreq executes one scan and one Generate (exchange reuse)") {
-    val ops = executedOperators(
-      TfIdfOps.termDocFreq(spark.read.parquet(s"$docsParquet/documents.parquet")))
+    val tdf = TfIdfOps.termDocFreq(spark.read.parquet(s"$docsParquet/documents.parquet"))
+    assert(tdf.queryExecution.analyzed.collect { case h: ResolvedHint => h }.isEmpty)
+    val ops = executedOperators(tdf)
     assert(ops.count(_.isInstanceOf[FileSourceScanExec]) === 1)
     assert(ops.count(_.isInstanceOf[GenerateExec]) === 1)
     assert(ops.exists(_.isInstanceOf[ReusedExchangeExec]))
