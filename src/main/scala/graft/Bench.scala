@@ -9,36 +9,14 @@ import graft.functions.TextOps
   * every query in [[SparkEntry.queries]] at that SF and prints ONE JSON
   * line {"metric","value","unit","queries","sf"}.
   *
-  * Measurement fixes this round (guide §1.1/§1.4/§1.5, documented with the
-  * pre-fix numbers in OPTIMIZATION_r21.md):
-  *  - The timed action is a noop-sink write instead of `count()`. `count()`
-  *    let the optimizer prune the computed columns, so pure projections
-  *    (clean_text, doc_fingerprint, doc_stats) timed an empty scan; the
-  *    noop sink computes every column of every row and discards it.
-  *  - An UNTIMED warmup runs first: rounds 11-20 show 12-21 s swings on
-  *    byte-identical code because whichever query ran first absorbed
-  *    executor startup, parquet-reader/file-listing init, Janino codegen
-  *    and JIT of the shared regex/aggregate paths. The warmup exercises
-  *    those shared code paths on SYNTHETIC range-generated text (no
-  *    declared query runs, nothing derived from the input is cached or
-  *    reused) plus one bare count of the input table to initialize the
-  *    scan path. Every timed query still computes entirely from parquet.
-  *  - Each query is timed three times and the minimum reported: per-query
-  *    Janino compilation (~0.1-0.3 s constants) and sandbox CPU-steal
-  *    spikes (2-4x swings observed between back-to-back identical runs)
-  *    otherwise dominate sub-second queries. Every run recomputes from
-  *    parquet; nothing is persisted between them.
-  *  - Round 22: the three repetitions are INTERLEAVED across queries
-  *    (three full passes over the sorted query list, per-query minimum)
-  *    instead of three back-to-back runs per query. BENCH_r21 timed
-  *    doc_stats at 14.28 s / doc_fingerprint at 3.28 s at 32 cores while
-  *    the same plans ran sub-second at 8 cores and in every builder run —
-  *    the two queries are adjacent in sorted order, so ONE multi-minute
-  *    CPU-steal window covered all six of their back-to-back samples and
-  *    min-of-3 could not reject it. With interleaved passes the three
-  *    samples of a query are minutes apart, so a single steal window can
-  *    poison at most one of them. Same queries, same min-of-3 semantics,
-  *    same env contract and JSON output.
+  *  - The timed action is a noop-sink write: `count()` lets the optimizer
+  *    prune computed columns, so a projection would time an empty scan.
+  *  - An untimed warmup runs first, on synthetic text plus one bare count
+  *    of the input, so that no query absorbs executor start-up, scan
+  *    init, codegen and JIT. Nothing from it is reused by a timed run.
+  *  - Each query's time is the minimum of three runs, taken in three
+  *    interleaved passes over the query list, so that one CPU-steal window
+  *    can spoil at most one of a query's samples.
   */
 object Bench {
   /** Seconds one noop-sink run of a query takes. A run that throws is

@@ -101,6 +101,10 @@ object TextOps {
   def keepToken(t: Column): Column =
     length(t) > 2 && !t.isin(NltkStopwords: _*)
 
+  /** SQL twin of [[keepToken]] for the token named `w`. */
+  def keepTokenSql(w: String): String =
+    s"length($w) > 2 AND $w NOT IN ($stopwordsSqlList)"
+
   /** Full cleaned token array for a raw-text column: [[cleanLowered]]
     * over Spark's own `lower`, as one codegen'd `StaticInvoke` (no UDF, no
     * Java-string round trip, no interpreted lambda). NULL in, NULL out. */
@@ -210,7 +214,7 @@ object TextOps {
        |    '$WsRe')) AS word
        |  FROM documents)
        |SELECT word, COUNT(*) AS cnt FROM toks
-       |WHERE length(word) > 2 AND word NOT IN ($stopwordsSqlList)
+       |WHERE ${keepTokenSql("word")}
        |GROUP BY word ORDER BY cnt DESC, word ASC LIMIT $k""".stripMargin
 
   /** Shared SQL fragment: cleaned-token stream (doc_id, word). */
@@ -226,5 +230,5 @@ object TextOps {
   val cleanTextSqlExpr: String =
     s"""CASE WHEN text IS NULL THEN NULL ELSE coalesce(array_to_string(
        |  list_filter(string_split_regex($normalizeSqlExpr, '$WsRe'),
-       |  w -> length(w) > 2 AND w NOT IN ($stopwordsSqlList)), ' '), '') END""".stripMargin
+       |  w -> ${keepTokenSql("w")}), ' '), '') END""".stripMargin
 }

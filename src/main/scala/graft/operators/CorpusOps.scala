@@ -70,7 +70,7 @@ object CorpusOps {
     s"""SELECT doc_id, word_count FROM (
        |  SELECT doc_id, len(list_filter(string_split_regex(
        |    ${TextOps.normalizeSqlExpr}, '${TextOps.WsRe}'),
-       |    w -> length(w) > 2 AND w NOT IN (${TextOps.stopwordsSqlList})
+       |    w -> ${TextOps.keepTokenSql("w")}
        |  )) AS word_count FROM documents)
        |WHERE word_count > 0 ORDER BY doc_id""".stripMargin
 
@@ -90,30 +90,14 @@ object CorpusOps {
     * computed in double and rounded to 4 dp for cross-engine stability.
     */
   def docStats(docs: DataFrame): DataFrame = {
-    // Staged (three-level) projection — each interpreted subtree runs ONCE
-    // per row. HOFs and INSET are CodegenFallback, and per-Project
-    // subexpression elimination does not reliably cover interpreted
-    // subtrees, so every expensive intermediate is materialized as an alias
-    // in a lower Project and only referenced above; CollapseProject keeps a
-    // Project boundary alive when a non-cheap alias is referenced more than
-    // once, so the staging survives optimization.
-    //  - level 1 (r21, "two-level"): `toks` (split + HOF empty-filter) and
-    //    `sum_len` computed once. Interleaved A/B vs single-Project
-    //    (graft.ProfileAB, 3 experiments x 7-16 rounds, 100x corpus):
-    //    ~5-10% on min, ~10-18% on median.
-    //  - level 2 (r22, ADVICE item): `n_stop` (the interpreted HOF
-    //    filter+INSET stopword count, previously expanded TWICE above —
-    //    stop_ratio and quality_score) plus n_tokens/n_distinct staged in a
-    //    middle Project. Interleaved A/B vs the two-level shape
-    //    (graft.ProfileAB, 3 experiments x 12-16 rounds, 100x corpus, 32c):
-    //    median -6.3%/-8.9%/-5.4%, GC time -15%/-25%/-18%, min -2%/+6%/+1%
-    //    — consistent direction on median and GC in all three experiments.
-    //    Result identical (same expressions, only staged); oracle green.
-    //
-    // sum_len: count of non-whitespace chars of the lowered text == sum of
-    // token lengths (tokens are exactly its non-whitespace runs), so one
-    // codegen'd regexp_replace replaces an interpreted transform+aggregate
-    // HOF pair (2.1x on the operator when it landed in r21).
+    // Staged projection: HOFs and INSET are interpreted (CodegenFallback)
+    // and subexpression elimination does not reliably cover them, so each
+    // such subtree (`toks`, `n_stop`) is an alias in a lower Project and
+    // runs once per row; CollapseProject keeps a boundary whose non-cheap
+    // alias is referenced more than once.
+    // sum_len is one codegen'd regex: the lowered text's non-whitespace
+    // chars are exactly the tokens' chars, so their count is the sum of
+    // token lengths.
     val lt = lower(col("text"))
     val base = docs.select(
       col("doc_id"),

@@ -25,8 +25,7 @@ object TfIdfOps {
   val termDocFreqSql: String =
     s"""WITH toks AS (
        |  SELECT doc_id, word AS term FROM (${TextOps.cleanToksSql})
-       |  WHERE length(word) > 2
-       |    AND word NOT IN (${TextOps.stopwordsSqlList})),
+       |  WHERE ${TextOps.keepTokenSql("word")}),
        |tf AS (SELECT doc_id, term, COUNT(*) AS tf
        |       FROM toks GROUP BY doc_id, term),
        |df AS (SELECT term, COUNT(DISTINCT doc_id) AS df

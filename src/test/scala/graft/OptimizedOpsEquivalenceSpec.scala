@@ -7,9 +7,11 @@ import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, Expression, RegEx
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -61,7 +63,7 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       (9L, "duplicate corpus text body", "fr"),                  // same clean text
       (10L, "tabs\tand\nnewlines\fand\rcarriage separate tokens", "en"),
       (11L, "spark query window vector hash stream join merge extra", "en"),
-      // https-heavy rows for the dead-branch claim (UrlReFused == UrlRe):
+      // https-heavy rows: the kernel's URL pass has no https branch
       (12L, "secure https://secure.example.com/path?q=1 gets stripped", "en"),
       (13L, "glued xhttps://y and bare https and httpsonly token", "en"),
       (14L, "https://a https://b www.c.org http://d.e mixed urls", "en"),
@@ -357,6 +359,38 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("declared documents schema == the schema Spark infers from the fixture") {
     assert(SparkEntry.DocumentsSchema ===
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet").schema)
+  }
+
+  test("plan shapes: per-query physical operator counts == the table") {
+    // the operator kinds perfbench's trace counts as plan.*
+    val kinds: Seq[(String, SparkPlan => Boolean)] = Seq(
+      "filescan" -> (_.isInstanceOf[FileSourceScanExec]),
+      "generate" -> (_.isInstanceOf[GenerateExec]),
+      "exchange" -> (_.isInstanceOf[ShuffleExchangeExec]),
+      "reused_exchange" -> (_.isInstanceOf[ReusedExchangeExec]),
+      "broadcast_exchange" -> (_.isInstanceOf[BroadcastExchangeExec]),
+      "window" -> (_.isInstanceOf[WindowExec]),
+      "sort" -> (_.isInstanceOf[SortExec]),
+      "hash_agg" -> (_.isInstanceOf[HashAggregateExec]))
+    // final AQE plan over docsParquet, one count per kind above, in order
+    val expected: Map[String, Seq[Int]] = Map(
+      "word_freq_top20"  -> Seq(1, 1, 1, 0, 0, 0, 0, 2),
+      "word_freq_top200" -> Seq(1, 1, 1, 0, 0, 0, 0, 2),
+      "clean_text"       -> Seq(1, 0, 1, 0, 0, 0, 1, 0),
+      "word_count"       -> Seq(1, 1, 1, 0, 0, 0, 1, 0),
+      "keyword_filter"   -> Seq(1, 0, 1, 0, 0, 0, 1, 0),
+      "doc_stats"        -> Seq(1, 0, 1, 0, 0, 0, 1, 0),
+      "lang_dist"        -> Seq(1, 0, 2, 0, 0, 0, 1, 2),
+      "doc_fingerprint"  -> Seq(1, 0, 1, 0, 0, 0, 1, 0),
+      "dedup_exact"      -> Seq(1, 0, 2, 0, 0, 0, 1, 2),
+      "term_doc_freq"    -> Seq(1, 1, 3, 1, 1, 0, 1, 5))
+    val actual = SparkEntry.queries.map { case (name, fn) =>
+      val ops = executedOperators(fn(spark, docsParquet))
+      name -> kinds.map { case (_, isKind) => ops.count(isKind) }
+    }
+    assert(actual.keySet === expected.keySet, actual)
+    for ((name, counts) <- actual)
+      assert(counts === expected(name), s"$name: ${kinds.map(_._1).zip(counts)}")
   }
 
   test("termDocFreq executes one scan and one Generate (exchange reuse)") {
