@@ -95,7 +95,7 @@ object TextOps {
   /** P5: whitespace tokenize with Python-`str.split()` parity — Spark's
     * split can emit empty tokens at string boundaries; drop them. */
   def tokenize(c: Column): Column =
-    filter(split(c, WsRe), t => t =!= lit(""))
+    array_remove(split(c, WsRe), "")
 
   /** F3+F4: NLTK stopword filter and len>2 filter (app.py:56). */
   def keepToken(t: Column): Column =
@@ -104,6 +104,12 @@ object TextOps {
   /** SQL twin of [[keepToken]] for the token named `w`. */
   def keepTokenSql(w: String): String =
     s"length($w) > 2 AND $w NOT IN ($stopwordsSqlList)"
+
+  /** SQL twin of [[cleanTokens]] over column `text`: [[normalizeSqlExpr]],
+    * the whitespace split and [[keepTokenSql]]. Every clean-chain oracle
+    * query is built from this, as its engine query is from [[cleanTokens]]. */
+  val cleanTokensSqlExpr: String =
+    s"list_filter(string_split_regex($normalizeSqlExpr, '$WsRe'), w -> ${keepTokenSql("w")})"
 
   /** Full cleaned token array for a raw-text column: [[cleanLowered]]
     * over Spark's own `lower`, as one codegen'd `StaticInvoke` (no UDF, no
@@ -206,29 +212,16 @@ object TextOps {
       .orderBy(desc("cnt"), asc("word"))
       .limit(k)
 
-  /** DuckDB oracle twin of [[wordFreq]]; regex + stopword list are the
-    * same Scala constants to guarantee character-identical semantics. */
+  /** DuckDB oracle twin of [[wordFreq]]. */
   def wordFreqSql(k: Int): String =
-    s"""WITH toks AS (
-       |  SELECT unnest(string_split_regex($normalizeSqlExpr,
-       |    '$WsRe')) AS word
-       |  FROM documents)
-       |SELECT word, COUNT(*) AS cnt FROM toks
-       |WHERE ${keepTokenSql("word")}
+    s"""SELECT word, COUNT(*) AS cnt FROM (
+       |  SELECT unnest($cleanTokensSqlExpr) AS word FROM documents)
        |GROUP BY word ORDER BY cnt DESC, word ASC LIMIT $k""".stripMargin
 
-  /** Shared SQL fragment: cleaned-token stream (doc_id, word). */
-  val cleanToksSql: String =
-    s"""SELECT doc_id, unnest(string_split_regex($normalizeSqlExpr,
-       |    '$WsRe')) AS word
-       |  FROM documents""".stripMargin
-
-  /** SQL twin of [[cleanText]] as a scalar expression over column `text`
-    * (DuckDB list lambda mirrors Spark's higher-order `filter`). NULL only
-    * for NULL `text`: DuckDB 1.0's `array_to_string([], ' ')` is NULL, where
-    * the reference's `" ".join([])` and [[cleanText]] give "". */
+  /** SQL twin of [[cleanText]] as a scalar expression over column `text`.
+    * NULL only for NULL `text`: DuckDB 1.0's `array_to_string([], ' ')` is
+    * NULL, where the reference's `" ".join([])` and [[cleanText]] give "". */
   val cleanTextSqlExpr: String =
-    s"""CASE WHEN text IS NULL THEN NULL ELSE coalesce(array_to_string(
-       |  list_filter(string_split_regex($normalizeSqlExpr, '$WsRe'),
-       |  w -> ${keepTokenSql("w")}), ' '), '') END""".stripMargin
+    s"CASE WHEN text IS NULL THEN NULL ELSE " +
+      s"coalesce(array_to_string($cleanTokensSqlExpr, ' '), '') END"
 }

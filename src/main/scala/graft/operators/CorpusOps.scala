@@ -68,10 +68,8 @@ object CorpusOps {
 
   val wordCountsSql: String =
     s"""SELECT doc_id, word_count FROM (
-       |  SELECT doc_id, len(list_filter(string_split_regex(
-       |    ${TextOps.normalizeSqlExpr}, '${TextOps.WsRe}'),
-       |    w -> ${TextOps.keepTokenSql("w")}
-       |  )) AS word_count FROM documents)
+       |  SELECT doc_id, len(${TextOps.cleanTokensSqlExpr}) AS word_count
+       |  FROM documents)
        |WHERE word_count > 0 ORDER BY doc_id""".stripMargin
 
   /** clean_text as an oracle-checked per-doc projection (P1-P5, P7, F3, F4;
@@ -90,11 +88,11 @@ object CorpusOps {
     * computed in double and rounded to 4 dp for cross-engine stability.
     */
   def docStats(docs: DataFrame): DataFrame = {
-    // Staged projection: HOFs and INSET are interpreted (CodegenFallback)
-    // and subexpression elimination does not reliably cover them, so each
-    // such subtree (`toks`, `n_stop`) is an alias in a lower Project and
-    // runs once per row; CollapseProject keeps a boundary whose non-cheap
-    // alias is referenced more than once.
+    // Staged projection: `n_stop`'s lambda filter is interpreted
+    // (CodegenFallback) and subexpression elimination does not reliably
+    // cover it, so `toks` and `n_stop` are each an alias in a lower Project
+    // and run once per row; CollapseProject keeps a boundary whose
+    // non-cheap alias is referenced more than once.
     // sum_len is one codegen'd regex: the lowered text's non-whitespace
     // chars are exactly the tokens' chars, so their count is the sum of
     // token lengths.

@@ -24,8 +24,8 @@ object TfIdfOps {
 
   val termDocFreqSql: String =
     s"""WITH toks AS (
-       |  SELECT doc_id, word AS term FROM (${TextOps.cleanToksSql})
-       |  WHERE ${TextOps.keepTokenSql("word")}),
+       |  SELECT doc_id, unnest(${TextOps.cleanTokensSqlExpr}) AS term
+       |  FROM documents),
        |tf AS (SELECT doc_id, term, COUNT(*) AS tf
        |       FROM toks GROUP BY doc_id, term),
        |df AS (SELECT term, COUNT(DISTINCT doc_id) AS df

@@ -229,7 +229,7 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("docStats regex sum_len == interpreted transform+aggregate formulation") {
-    val toks = TextOps.tokenize(lower(col("text")))
+    val toks = filter(split(lower(col("text")), TextOps.WsRe), (t: Column) => t =!= "")
     val nTok = size(toks)
     val nStop = size(filter(toks, (t: Column) => t.isin(TextOps.NltkStopwords: _*)))
     val sumLenHof = aggregate(transform(toks, (t: Column) => length(t)), lit(0),
@@ -257,7 +257,7 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = docs.select(
       col("doc_id"),
       length(col("text")).as("n_chars"),
-      TextOps.tokenize(lt).as("toks"),
+      filter(split(lt, TextOps.WsRe), (t: Column) => t =!= "").as("toks"),
       length(regexp_replace(lt, TextOps.WsRe, "")).as("sum_len"))
     val nTok = size(col("toks"))
     val nStop = size(filter(col("toks"),
