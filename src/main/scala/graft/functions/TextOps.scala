@@ -2,10 +2,12 @@ package graft.functions
 
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{Column, DataFrame, ExpressionBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-cleaning + corpus-statistics pipeline, rebuilt Spark-first.
@@ -17,12 +19,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Everything is a codegen'd Catalyst expression (no UDFs), so each query's
   * chain fuses into one WholeStageCodegen stage and the scan prunes to
-  * `text`. The clean chain itself is one `StaticInvoke` of the byte kernel
-  * [[cleanLowered]] over Spark's own `lower(text)`; everything else is
-  * composed from `org.apache.spark.sql.functions` built-ins. The lemmatizer
-  * (app.py:54) is deliberately NOT part of these oracle-checked paths:
-  * WordNet morphy is not SQL-expressible, so its implementation lives
-  * outside this object and is golden-tested instead of DuckDB-oracle-checked.
+  * `text`. The per-row text work is two byte kernels over Spark's own
+  * `lower(text)`, each one `StaticInvoke` that walks the whitespace tokens:
+  * [[cleanLowered]] (the clean chain) and [[statsLowered]] (doc_stats'
+  * counts). Everything else is composed from `org.apache.spark.sql.functions`
+  * built-ins. The reference's lemmatizer (app.py:54) is not built.
   */
 object TextOps {
 
@@ -111,12 +112,18 @@ object TextOps {
   val cleanTokensSqlExpr: String =
     s"list_filter(string_split_regex($normalizeSqlExpr, '$WsRe'), w -> ${keepTokenSql("w")})"
 
-  /** Full cleaned token array for a raw-text column: [[cleanLowered]]
-    * over Spark's own `lower`, as one codegen'd `StaticInvoke` (no UDF, no
-    * Java-string round trip, no interpreted lambda). NULL in, NULL out. */
+  /** Full cleaned token array of a raw-text column. NULL in, NULL out. */
   def cleanTokens(c: Column): Column =
-    ExpressionBridge.column(StaticInvoke(getClass,
-      ArrayType(StringType, containsNull = false), "cleanLowered",
+    lowered("cleanLowered", ArrayType(StringType, containsNull = false), c)
+
+  /** doc_stats' token counts of a raw-text column. NULL in, NULL out. */
+  def tokenStats(c: Column): Column = lowered("statsLowered",
+    StructType.fromDDL("n_tokens INT, n_distinct INT, n_stop INT, sum_len INT"), c)
+
+  /** The byte kernel `kernel` of this object over Spark's own `lower(c)`, as
+    * one codegen'd `StaticInvoke`: no UDF, no Java-string round trip. */
+  private def lowered(kernel: String, dataType: DataType, c: Column): Column =
+    ExpressionBridge.column(StaticInvoke(getClass, dataType, kernel,
       Seq(ExpressionBridge.expression(lower(c))), returnNullable = false))
 
   private val Stopwords = new java.util.HashSet[UTF8String]()
@@ -128,71 +135,92 @@ object TextOps {
   private def isWord(b: Byte): Boolean = // ASCII \w, as in Java and RE2
     (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9') || b == '_'
 
+  /** End of the token at `from`: its first whitespace index, or `in.length`. */
+  private def tokenEnd(in: Array[Byte], from: Int): Int = {
+    var i = from
+    while (i < in.length && !isWs(in(i))) i += 1
+    i
+  }
+
+  /** Start of the first [[UrlRe]] match in the token `in(from until end)`,
+    * or `end`: `http` or `www` and one more byte (`https` implies `http`). */
+  private def urlStart(in: Array[Byte], from: Int, end: Int): Int = {
+    var p = from
+    while (p < end && !(
+        p + 4 < end && in(p) == 'h' && in(p + 1) == 't' && in(p + 2) == 't' && in(p + 3) == 'p' ||
+        p + 3 < end && in(p) == 'w' && in(p + 1) == 'w' && in(p + 2) == 'w')) p += 1
+    p
+  }
+
   /** The clean chain on the UTF-8 bytes of already-lowered text. The result
     * is exactly `filter(split(p, WsRe), keepToken)`, where `p` is the
     * lowered text after the three regex passes of [[normalize]].
     *
-    * Pass 1 removes [[UrlRe]] leftmost-first and greedily into a scratch
-    * array (its `https` branch can never match where `http` does not).
-    * Pass 2 scans that once: it skips each [[MentionRe]] match, drops every
-    * byte outside [[NonAlphaRe]]'s complement, splits on whitespace runs and
-    * keeps each token longer than 2 that is not a stopword. Bytes are exact
-    * here: ASCII bytes never occur inside a multi-byte UTF-8 sequence, every
-    * pattern literal and class member is ASCII, and every non-ASCII
-    * character is neither whitespace nor a letter in `[a-z]`.
+    * No pass deletes whitespace and a [[UrlRe]] match runs to the end of its
+    * token, so each whitespace token cleans on its own: cut it at its first
+    * URL, then skip each [[MentionRe]] match before the cut (`@abhttp://x`
+    * cleans to "", not "x"), keep its `[a-z]` bytes, and keep the result if
+    * it is longer than 2 and not a stopword. Bytes are exact here: ASCII
+    * bytes never occur inside a multi-byte UTF-8 sequence, every pattern
+    * literal and class member is ASCII, and every non-ASCII character is
+    * neither whitespace nor a letter in `[a-z]`.
     */
   def cleanLowered(lowered: UTF8String): ArrayData = {
     val in = lowered.getBytes
-    val n = in.length
-    val buf = new Array[Byte](n)
-    var len = 0
-    var i = 0
-    while (i < n) {
-      val prefix =
-        if (i + 4 < n && in(i) == 'h' && in(i + 1) == 't' && in(i + 2) == 't' &&
-            in(i + 3) == 'p') 4
-        else if (i + 3 < n && in(i) == 'w' && in(i + 1) == 'w' && in(i + 2) == 'w') 3
-        else 0
-      if (prefix > 0 && !isWs(in(i + prefix))) {
-        i += prefix + 1
-        while (i < n && !isWs(in(i))) i += 1
-      } else {
-        buf(len) = in(i)
-        len += 1
-        i += 1
-      }
-    }
-    // Pass 2 compacts the current token's letters in place at
-    // buf(start until w); w never passes the read index r. A kept token is
-    // a view of its bytes (fromBytes does not copy), so the next token
-    // starts after it.
+    // buf(start until w) holds the current token's letters; a kept token is
+    // a view of them (fromBytes does not copy), so the next one starts after.
+    val buf = new Array[Byte](in.length)
     val out = ArrayBuffer.empty[Any]
     var start = 0
-    var w = 0
-    var r = 0
-    while (r <= len) {
-      if (r == len || isWs(buf(r))) {
-        if (w - start > 2) {
-          val token = UTF8String.fromBytes(buf, start, w - start)
-          if (!Stopwords.contains(token)) {
-            out += token
-            start = w
-          }
-        }
-        w = start
+    var from = 0
+    while (from < in.length) {
+      val end = tokenEnd(in, from)
+      val cut = urlStart(in, from, end)
+      var w = start
+      var r = from
+      while (r < cut) {
+        val b = in(r)
         r += 1
-      } else if (buf(r) == '@' && r + 1 < len && isWord(buf(r + 1))) {
-        r += 2
-        while (r < len && isWord(buf(r))) r += 1
-      } else {
-        if (buf(r) >= 'a' && buf(r) <= 'z') {
-          buf(w) = buf(r)
+        if (b == '@') while (r < cut && isWord(in(r))) r += 1 // a MentionRe match, or a lone '@'
+        else if (b >= 'a' && b <= 'z') {
+          buf(w) = b
           w += 1
         }
-        r += 1
       }
+      if (w - start > 2) {
+        val token = UTF8String.fromBytes(buf, start, w - start)
+        if (!Stopwords.contains(token)) {
+          out += token
+          start = w
+        }
+      }
+      from = end + 1
     }
     new GenericArrayData(out.toArray)
+  }
+
+  /** doc_stats' counts over the whitespace tokens of already-lowered text:
+    * tokens, distinct tokens, stopword tokens, and the sum of the token
+    * lengths in characters (code points, as `length` counts them). */
+  def statsLowered(lowered: UTF8String): InternalRow = {
+    val in = lowered.getBytes
+    val distinct = new java.util.HashSet[UTF8String]()
+    var nTokens = 0
+    var nStop = 0
+    var sumLen = 0
+    var from = 0
+    while (from < in.length) {
+      val end = tokenEnd(in, from)
+      if (end > from) {
+        val token = UTF8String.fromBytes(in, from, end - from)
+        nTokens += 1
+        distinct.add(token)
+        if (Stopwords.contains(token)) nStop += 1
+        sumLen += token.numChars
+      }
+      from = end + 1
+    }
+    new GenericInternalRow(Array[Any](nTokens, distinct.size, nStop, sumLen))
   }
 
   /** P7: the reference's clean_text output (sans lemmatizer — see class doc). */

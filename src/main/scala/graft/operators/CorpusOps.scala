@@ -72,9 +72,8 @@ object CorpusOps {
        |  FROM documents)
        |WHERE word_count > 0 ORDER BY doc_id""".stripMargin
 
-  /** clean_text as an oracle-checked per-doc projection (P1-P5, P7, F3, F4;
-    * lemmatizer excluded — non-SQL-expressible, golden-tested separately).
-    */
+  /** clean_text as an oracle-checked per-doc projection (P1-P5, P7, F3,
+    * F4). The reference's lemmatizer (app.py:54) is not built. */
   def cleanTexts(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), TextOps.cleanText(col("text")).as("clean_text"))
 
@@ -88,34 +87,13 @@ object CorpusOps {
     * computed in double and rounded to 4 dp for cross-engine stability.
     */
   def docStats(docs: DataFrame): DataFrame = {
-    // Staged projection: `n_stop`'s lambda filter is interpreted
-    // (CodegenFallback) and subexpression elimination does not reliably
-    // cover it, so `toks` and `n_stop` are each an alias in a lower Project
-    // and run once per row; CollapseProject keeps a boundary whose
-    // non-cheap alias is referenced more than once.
-    // sum_len is one codegen'd regex: the lowered text's non-whitespace
-    // chars are exactly the tokens' chars, so their count is the sum of
-    // token lengths.
-    val lt = lower(col("text"))
-    val base = docs.select(
-      col("doc_id"),
-      length(col("text")).as("n_chars"),
-      TextOps.tokenize(lt).as("toks"),
-      length(regexp_replace(lt, TextOps.WsRe, "")).as("sum_len"))
-    val mid = base.select(
-      col("doc_id"), col("n_chars"), col("sum_len"),
-      size(col("toks")).as("n_tokens"),
-      size(array_distinct(col("toks"))).as("n_distinct"),
-      size(filter(col("toks"),
-        (t: Column) => t.isin(TextOps.NltkStopwords: _*))).as("n_stop"))
-    val nTok = col("n_tokens")
-    val nStop = col("n_stop")
-    mid.select(
-      col("doc_id"),
-      col("n_chars"),
-      col("n_tokens"),
-      col("n_distinct"),
-      when(nTok > 0, round(col("sum_len").cast("double") / nTok, 4)).otherwise(0.0)
+    val stats = docs.select(col("doc_id"), length(col("text")).as("n_chars"),
+      TextOps.tokenStats(col("text")).as("s"))
+    val nTok = col("s.n_tokens")
+    val nStop = col("s.n_stop")
+    stats.select(
+      col("doc_id"), col("n_chars"), nTok, col("s.n_distinct"),
+      when(nTok > 0, round(col("s.sum_len").cast("double") / nTok, 4)).otherwise(0.0)
         .as("avg_token_len"),
       when(nTok > 0, round(nStop.cast("double") / nTok, 4)).otherwise(0.0)
         .as("stop_ratio"),
@@ -126,11 +104,13 @@ object CorpusOps {
     )
   }
 
+  // DuckDB 1.0 lowers İ (U+0130) to `i`; Java and Python add U+0307 to it.
   val docStatsSql: String =
     s"""WITH t AS (
        |  SELECT doc_id, length(text) AS n_chars,
-       |    list_filter(string_split_regex(lower(text), '${TextOps.WsRe}'),
-       |                w -> w <> '') AS toks
+       |    list_filter(string_split_regex(
+       |      lower(replace(text, chr(304), 'i' || chr(775))), '${TextOps.WsRe}'),
+       |      w -> w <> '') AS toks
        |  FROM documents),
        |s AS (
        |  SELECT doc_id, n_chars, len(toks) AS n_tokens,
@@ -180,9 +160,7 @@ object CorpusOps {
     * to `dropDuplicates` but with a deterministic survivor — at 100 TB this
     * is a single shuffle on the 128-bit key with map-side partial agg. */
   def dedupExact(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      md5(TextOps.cleanText(col("text")).cast("binary")).as("fp"))
-      .groupBy("fp")
+    fingerprints(docs).groupBy("fp")
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("dup_cnt"))
       .select("keep_id", "dup_cnt")
 

@@ -79,7 +79,9 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       (22L, "emoji \uD83D\uDE00 between\uD83C\uDF89words", "en"),
       // Kelvin sign and dotted capital I lowercase to ASCII k and i (plus a
       // combining dot, which the non-alpha strip drops)
-      (23L, "\u212Aelvin \u0130stanbul", "tr")
+      (23L, "\u212Aelvin \u0130stanbul", "tr"),
+      // the URL is cut before mentions are skipped: not "keep xyz"
+      (24L, "keep @abhttp://xyz", "en")
     )
     spark.createDataFrame(rows).toDF("doc_id", "text", "lang")
       .withColumn("n_chars", length(col("text")))
@@ -111,7 +113,7 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def isKernel(e: Expression): Boolean = e match {
-    case s: StaticInvoke => s.functionName == "cleanLowered"
+    case s: StaticInvoke => s.functionName == "cleanLowered" || s.functionName == "statsLowered"
     case _ => false
   }
 
@@ -125,6 +127,62 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     filter(split(regexp_replace(regexp_replace(regexp_replace(lower(text),
       TextOps.UrlRe, ""), TextOps.MentionRe, ""), TextOps.NonAlphaRe, ""),
       TextOps.WsRe), (t: Column) => TextOps.keepToken(t))
+
+  /** doc_stats as built-ins over Spark's own split: size, array_distinct,
+    * an interpreted stopword filter and a transform+aggregate length sum. */
+  private def plainDocStats(df: DataFrame): DataFrame = {
+    val toks = filter(split(lower(col("text")), TextOps.WsRe), (t: Column) => t =!= "")
+    val nTok = size(toks)
+    val nStop = size(filter(toks, (t: Column) => t.isin(TextOps.NltkStopwords: _*)))
+    val sumLenHof = aggregate(transform(toks, (t: Column) => length(t)), lit(0),
+      (acc: Column, x: Column) => acc + x)
+    df.select(
+      col("doc_id"),
+      length(col("text")).as("n_chars"),
+      nTok.as("n_tokens"),
+      size(array_distinct(toks)).as("n_distinct"),
+      when(nTok > 0, round(sumLenHof.cast("double") / nTok, 4)).otherwise(0.0)
+        .as("avg_token_len"),
+      when(nTok > 0, round(nStop.cast("double") / nTok, 4)).otherwise(0.0)
+        .as("stop_ratio"),
+      when(nTok > 0,
+        round(least(lit(1.0), nTok.cast("double") / 50.0) *
+          (lit(1.0) - nStop.cast("double") / nTok), 4)).otherwise(0.0)
+        .as("quality_score"))
+  }
+
+  /** 5,000 seeded strings, heavy in the bytes the URL, mention and
+    * whitespace rules look at, with multi-byte letters, NBSP and emoji. */
+  private val generatedTexts: Seq[String] = {
+    val unit = Gen.frequency(
+      16 -> Gen.oneOf("h", "t", "p", "w", "@", "_", ":", "/", ".", " ", "\t",
+        "\u000B", "s", "a", "x", "1"),
+      4 -> Gen.oneOf("http", "www", "https://", "the", "and", "\n", "\f", "\r", "  "),
+      3 -> Gen.oneOf("H", "T", "P", "W", "S", "@X"),
+      2 -> Gen.oneOf("é", "ï", "É", "ß", "\u00A0", "\u212A", "\u0130"),
+      1 -> Gen.oneOf("\uD83D\uDE00", "\uD83C\uDF89"))
+    val text = Gen.choose(0, 40).flatMap(n => Gen.listOfN(n, unit).map(_.mkString))
+    Gen.listOfN(5000, text).pureApply(Gen.Parameters.default, Seed(20261017L))
+  }
+
+  /** [[generatedTexts]] as (doc_id, text), doc_id the index. */
+  private def generated: DataFrame =
+    spark.createDataFrame(generatedTexts.zipWithIndex.map { case (t, i) => (i.toLong, t) })
+      .toDF("doc_id", "text")
+
+  /** `s` with every char as a unicode escape, for failure messages. */
+  private def escaped(s: String): String = s.map(c => f"\\u${c.toInt}%04x").mkString
+
+  /** Runs `f` on the interpreted path: no expression codegen, no
+    * whole-stage codegen. */
+  private def withoutCodegen[T](f: => T): T = {
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try f finally {
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+    }
+  }
 
   private def collectSorted(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
@@ -173,14 +231,9 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cleaned = docs.select(col("doc_id"), TextOps.cleanText(col("text")))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     // the interpreted path (no codegen) finds and calls the same kernel
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try {
+    withoutCodegen {
       assert(docs.select(col("doc_id"), TextOps.cleanText(col("text")))
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap === cleaned)
-    } finally {
-      spark.conf.unset("spark.sql.codegen.factoryMode")
-      spark.conf.unset("spark.sql.codegen.wholeStage")
     }
     assert(cleaned(15L) === null)
     assert(cleaned(16L) === "glued")
@@ -191,30 +244,40 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cleaned(21L) === "verticaltab andnbsp joined")
     assert(cleaned(22L) === "emoji betweenwords")
     assert(cleaned(23L) === "kelvin istanbul")
+    assert(cleaned(24L) === "keep")
   }
 
   test("cleanTokens kernel == three-pass formulation on 5,000 seeded generated strings") {
-    // heavy in the bytes the URL, mention and whitespace rules look at
-    val unit = Gen.frequency(
-      16 -> Gen.oneOf("h", "t", "p", "w", "@", "_", ":", "/", ".", " ", "\t",
-        "\u000B", "s", "a", "x", "1"),
-      4 -> Gen.oneOf("http", "www", "https://", "the", "and", "\n", "\f", "\r", "  "),
-      3 -> Gen.oneOf("H", "T", "P", "W", "S", "@X"),
-      2 -> Gen.oneOf("é", "ï", "É", "ß", "\u00A0", "\u212A", "\u0130"),
-      1 -> Gen.oneOf("\uD83D\uDE00", "\uD83C\uDF89"))
-    val text = Gen.choose(0, 40).flatMap(n => Gen.listOfN(n, unit).map(_.mkString))
-    val texts = Gen.listOfN(5000, text).pureApply(Gen.Parameters.default, Seed(20261017L))
-    val generated = spark.createDataFrame(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) })
-      .toDF("id", "text")
     val rows = generated.select(col("text"), TextOps.cleanTokens(col("text")),
       threePassTokens(col("text"))).collect()
     val mismatches = rows.filter(r => r.getSeq[String](1) != r.getSeq[String](2))
     assert(mismatches.isEmpty,
-      mismatches.take(5).map(r => s"${r.getString(0).map(c => f"\\u${c.toInt}%04x").mkString}: " +
+      mismatches.take(5).map(r => s"${escaped(r.getString(0))}: " +
         s"kernel ${r.getSeq[String](1)} != three-pass ${r.getSeq[String](2)}").mkString("\n"))
     // the corpus reaches the kernel's branches: URLs, mentions, kept tokens
-    assert(texts.count(_.toLowerCase.contains("http")) > 500)
+    assert(generatedTexts.count(_.toLowerCase.contains("http")) > 500)
     assert(rows.count(_.getSeq[String](1).nonEmpty) > 500)
+  }
+
+  test("docStats kernel == plain formulation on 5,000 seeded strings") {
+    val plain = plainDocStats(generated).collect().map(r => r.getLong(0) -> r).toMap
+    def check(): Unit = {
+      val stats = CorpusOps.docStats(generated)
+      assert(stats.schema.map(f => (f.name, f.dataType)) ===
+        plainDocStats(generated).schema.map(f => (f.name, f.dataType)))
+      val kernel = stats.collect().map(r => r.getLong(0) -> r).toMap
+      val mismatches = plain.keys.toSeq.sorted.filter(id => kernel(id) != plain(id))
+      assert(mismatches.isEmpty, mismatches.take(5).map(id =>
+        s"${escaped(generatedTexts(id.toInt))}: kernel ${kernel(id)} != plain ${plain(id)}")
+        .mkString("\n"))
+    }
+    check()
+    withoutCodegen(check()) // the interpreted path calls the same kernel
+    // the corpus reaches stopwords, repeated tokens and multi-byte chars
+    val rows = plain.values.toSeq
+    assert(rows.count(_.getAs[Double]("stop_ratio") > 0) > 500)
+    assert(rows.count(r => r.getAs[Int]("n_distinct") < r.getAs[Int]("n_tokens")) > 20)
+    assert(generatedTexts.count(_.exists(_ > '\u007F')) > 500)
   }
 
   test("wordCounts Generate-barrier == plain select+filter formulation") {
@@ -228,29 +291,11 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!kept.contains(2L) && !kept.contains(6L) && !kept.contains(7L))
   }
 
-  test("docStats regex sum_len == interpreted transform+aggregate formulation") {
-    val toks = filter(split(lower(col("text")), TextOps.WsRe), (t: Column) => t =!= "")
-    val nTok = size(toks)
-    val nStop = size(filter(toks, (t: Column) => t.isin(TextOps.NltkStopwords: _*)))
-    val sumLenHof = aggregate(transform(toks, (t: Column) => length(t)), lit(0),
-      (acc: Column, x: Column) => acc + x)
-    val reference = docs.select(
-      col("doc_id"),
-      length(col("text")).as("n_chars"),
-      nTok.as("n_tokens"),
-      size(array_distinct(toks)).as("n_distinct"),
-      when(nTok > 0, round(sumLenHof.cast("double") / nTok, 4)).otherwise(0.0)
-        .as("avg_token_len"),
-      when(nTok > 0, round(nStop.cast("double") / nTok, 4)).otherwise(0.0)
-        .as("stop_ratio"),
-      when(nTok > 0,
-        round(least(lit(1.0), nTok.cast("double") / 50.0) *
-          (lit(1.0) - nStop.cast("double") / nTok), 4)).otherwise(0.0)
-        .as("quality_score"))
-    assertSameResult(CorpusOps.docStats(docs), reference)
+  test("docStats kernel == transform+aggregate formulation") {
+    assertSameResult(CorpusOps.docStats(docs), plainDocStats(docs))
   }
 
-  test("docStats r22 staged projection == r21 two-level formulation") {
+  test("docStats kernel == regex sum_len two-level formulation") {
     // the r21 shape: toks/sum_len staged once, but n_stop/n_tokens expanded
     // inline in the output Project (n_stop twice)
     val lt = lower(col("text"))
@@ -334,8 +379,8 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("per-doc queries sort their (doc_id, text) input: no regex under the range exchange") {
     for (name <- Seq("clean_text", "word_count", "doc_stats", "doc_fingerprint")) {
       val ops = executedOperators(SparkEntry.queries(name)(spark, docsParquet))
-      // the kernel runs, above the exchange (doc_stats has no clean step)
-      assert(anyExpression(ops)(isKernel) === (name != "doc_stats"), name)
+      // its kernel runs, above the exchange
+      assert(anyExpression(ops)(isKernel), name)
       val rangeExchanges = ops
         .collect { case e: ShuffleExchangeExec
           if e.outputPartitioning.isInstanceOf[RangePartitioning] => e }
@@ -354,6 +399,16 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!anyExpression(ops)(e => e.isInstanceOf[ArrayFilter] ||
         e.isInstanceOf[StringSplit] || e.isInstanceOf[RegExpReplace]), name)
     }
+  }
+
+  test("doc_stats plan: one statsLowered, no ArrayFilter/split/regex") {
+    val ops = executedOperators(SparkEntry.queries("doc_stats")(spark, docsParquet))
+    assert(!anyExpression(ops)(e => e.isInstanceOf[ArrayFilter] ||
+      e.isInstanceOf[StringSplit] || e.isInstanceOf[RegExpReplace]))
+    // CollapseProject must not inline the struct once per field
+    val calls = ops.flatMap(_.expressions).map(_.collect {
+      case s: StaticInvoke if s.functionName == "statsLowered" => s }.size).sum
+    assert(calls === 1)
   }
 
   test("declared documents schema == the schema Spark infers from the fixture") {
