@@ -19,11 +19,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Everything is a codegen'd Catalyst expression (no UDFs), so each query's
   * chain fuses into one WholeStageCodegen stage and the scan prunes to
-  * `text`. The per-row text work is two byte kernels over Spark's own
-  * `lower(text)`, each one `StaticInvoke` that walks the whitespace tokens:
-  * [[cleanLowered]] (the clean chain) and [[statsLowered]] (doc_stats'
-  * counts). Everything else is composed from `org.apache.spark.sql.functions`
-  * built-ins. The reference's lemmatizer (app.py:54) is not built.
+  * `text`. The per-row text work is three byte kernels over Spark's own
+  * `lower(text)`, each one `StaticInvoke`: [[cleanLowered]] (the clean
+  * chain) and [[statsLowered]] (doc_stats' counts) walk the whitespace
+  * tokens, and [[termCountsLowered]] (term_doc_freq's per-document tf)
+  * counts the tokens of [[cleanLowered]]. Everything else is composed from
+  * `org.apache.spark.sql.functions` built-ins. The reference's lemmatizer
+  * (app.py:54) is not built.
   */
 object TextOps {
 
@@ -116,6 +118,11 @@ object TextOps {
   def cleanTokens(c: Column): Column =
     lowered("cleanLowered", ArrayType(StringType, containsNull = false), c)
 
+  /** Each document's term frequencies: one `(term, tf)` struct per distinct
+    * [[cleanTokens]] token of a raw-text column. NULL in, NULL out. */
+  def termCounts(c: Column): Column = lowered("termCountsLowered", ArrayType(
+    StructType.fromDDL("term STRING NOT NULL, tf BIGINT NOT NULL"), containsNull = false), c)
+
   /** doc_stats' token counts of a raw-text column. NULL in, NULL out. */
   def tokenStats(c: Column): Column = lowered("statsLowered",
     StructType.fromDDL("n_tokens INT, n_distinct INT, n_stop INT, sum_len INT"), c)
@@ -165,7 +172,7 @@ object TextOps {
     * literal and class member is ASCII, and every non-ASCII character is
     * neither whitespace nor a letter in `[a-z]`.
     */
-  def cleanLowered(lowered: UTF8String): ArrayData = {
+  def cleanLowered(lowered: UTF8String): GenericArrayData = {
     val in = lowered.getBytes
     // buf(start until w) holds the current token's letters; a kept token is
     // a view of them (fromBytes does not copy), so the next one starts after.
@@ -195,6 +202,22 @@ object TextOps {
         }
       }
       from = end + 1
+    }
+    new GenericArrayData(out.toArray)
+  }
+
+  /** The distinct [[cleanLowered]] tokens of already-lowered text, each with
+    * its count: the tokens sorted, then counted run by run. */
+  def termCountsLowered(lowered: UTF8String): ArrayData = {
+    val terms = cleanLowered(lowered).array.asInstanceOf[Array[AnyRef]]
+    java.util.Arrays.sort(terms)
+    val out = ArrayBuffer.empty[Any]
+    var i = 0
+    while (i < terms.length) {
+      var j = i + 1
+      while (j < terms.length && terms(j) == terms(i)) j += 1
+      out += new GenericInternalRow(Array[Any](terms(i), (j - i).toLong))
+      i = j
     }
     new GenericArrayData(out.toArray)
   }

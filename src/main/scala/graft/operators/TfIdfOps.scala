@@ -1,25 +1,27 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextOps
 
 /** A2+A3: per-doc term frequency joined with per-term document
-  * frequency (app.py:156-157) — the relational spine of TF-IDF.
-  * One scan + one explode + one hash aggregate, then a vocabulary-sized
-  * per-term count joined back; no UDFs, no driver-side work. */
+  * frequency (app.py:156-157) — the relational spine of TF-IDF; no UDFs,
+  * no driver-side work.
+  *
+  * tf is counted inside each document's row, as in the reference, where
+  * each tweet is one row of sklearn's term matrix (app.py:156-166): the
+  * [[TextOps.termCounts]] kernel emits one `(term, tf)` row per distinct
+  * term, so nothing is shuffled on `(doc_id, term)`. That is exact because
+  * `doc_id` is the documents key (FIXTURES.md). df is then a partial plus
+  * final hash aggregate on `term`, whose map-side combine absorbs hot
+  * terms, joined back to tf. The planner broadcasts df while it is under
+  * `spark.sql.autoBroadcastJoinThreshold`; past that it sort-merge joins,
+  * and AQE's skew-join rule can split a hot term's partitions. */
 object TfIdfOps {
   def termDocFreq(docs: DataFrame): DataFrame = {
-    val toks = docs.select(col("doc_id"),
-      explode(TextOps.cleanTokens(col("text"))).as("term"))
-    val tf = toks.groupBy("doc_id", "term")
-      .agg(count(lit(1)).as("tf"))
-    // df = tf rows per term; count(when(tf > 0, 1)) is count(*) that keeps
-    // AQE's exchange reuse, hence one scan (OPTIMIZATION_r22.md).
-    val dfreq = tf.groupBy("term")
-      .agg(count(when(col("tf") > 0, 1)).as("df"))
-    tf.join(dfreq, "term")
-      .select("doc_id", "term", "tf", "df")
+    val tf = docs.select(col("doc_id"), inline(TextOps.termCounts(col("text"))))
+    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
+    tf.join(dfreq, "term").select("doc_id", "term", "tf", "df")
   }
 
   val termDocFreqSql: String =

@@ -3,17 +3,18 @@ package graft
 import java.nio.file.{Files, Path}
 import java.util.Comparator
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, Expression, RegExpReplace, StringSplit}
+import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, CaseWhen, Expression, RegExpReplace, StringSplit}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
-import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
 import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -113,7 +114,8 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def isKernel(e: Expression): Boolean = e match {
-    case s: StaticInvoke => s.functionName == "cleanLowered" || s.functionName == "statsLowered"
+    case s: StaticInvoke =>
+      Set("cleanLowered", "statsLowered", "termCountsLowered").contains(s.functionName)
     case _ => false
   }
 
@@ -280,6 +282,35 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(generatedTexts.count(_.exists(_ > '\u007F')) > 500)
   }
 
+  test("termCounts kernel == groupBy(doc_id, term).count() over cleanTokens on 5,000 seeded strings and their doubles") {
+    // each generated string also doubled, so that most kept terms repeat
+    val texts = generatedTexts ++ generatedTexts.map(t => t + " " + t)
+    val seeded = spark.createDataFrame(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) })
+      .toDF("doc_id", "text")
+    def byDoc(df: DataFrame): Map[Long, Seq[(String, Long)]] =
+      df.collect().toSeq.groupBy(_.getLong(0))
+        .map { case (id, rs) => id -> rs.map(r => (r.getString(1), r.getLong(2))).sorted }
+    for ((corpus, text) <- Seq(
+        docs -> docs.collect().map(r => r.getLong(0) -> r.getString(1)).toMap,
+        seeded -> texts.indices.map(i => i.toLong -> texts(i)).toMap)) {
+      val grouped = byDoc(corpus.select(col("doc_id"),
+          explode(TextOps.cleanTokens(col("text"))).as("term"))
+        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
+      def check(): Unit = {
+        val kernel = byDoc(corpus.select(col("doc_id"), inline(TextOps.termCounts(col("text")))))
+        val mismatches = (kernel.keySet ++ grouped.keySet).toSeq.sorted
+          .filter(id => kernel.get(id) != grouped.get(id))
+        assert(mismatches.isEmpty, mismatches.take(5).map(id => s"${escaped(text(id))}: " +
+          s"kernel ${kernel.get(id)} != grouped ${grouped.get(id)}").mkString("\n"))
+      }
+      check()
+      withoutCodegen(check()) // the interpreted path calls the same kernel
+    }
+    // the doubled strings reach the run counting: many terms with tf > 1
+    val repeated = seeded.select(inline(TextOps.termCounts(col("text")))).where(col("tf") > 1)
+    assert(repeated.count() > 1000)
+  }
+
   test("wordCounts Generate-barrier == plain select+filter formulation") {
     val plain = docs.select(col("doc_id"),
         TextOps.wordCount(col("text")).as("word_count"))
@@ -321,13 +352,17 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertSameResult(CorpusOps.docStats(docs), reference)
   }
 
-  test("termDocFreq broadcast-join-back == join with countDistinct formulation") {
+  test("termDocFreq per-row tf == groupBy(doc_id, term) tf joined with countDistinct and Window df") {
     val toks = docs.select(col("doc_id"),
       explode(TextOps.cleanTokens(col("text"))).as("term"))
     val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val dfreq = toks.groupBy("term").agg(countDistinct("doc_id").as("df"))
     val reference = tf.join(dfreq, "term").select("doc_id", "term", "tf", "df")
     assertSameResult(TfIdfOps.termDocFreq(docs), reference)
+    // the same schema as the explode-and-group shape, nullability included
+    assert(TfIdfOps.termDocFreq(docs).schema === reference.schema)
+    assert(SparkEntry.queries("term_doc_freq")(spark, docsParquet).schema === StructType.fromDDL(
+      "doc_id BIGINT, term STRING NOT NULL, tf BIGINT NOT NULL, df BIGINT NOT NULL"))
     // and against the r21 window formulation (count over partition by term)
     val windowRef = tf.withColumn("df",
         count(lit(1)).over(Window.partitionBy("term")))
@@ -376,8 +411,8 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(clean.exists(r => r.getString(1) == "") && clean.exists(_.isNullAt(1)))
   }
 
-  test("per-doc queries sort their (doc_id, text) input: no regex under the range exchange") {
-    for (name <- Seq("clean_text", "word_count", "doc_stats", "doc_fingerprint")) {
+  test("input-sorted queries sort their (doc_id, text) input: no regex under the range exchange") {
+    for (name <- Seq("clean_text", "word_count", "doc_stats", "doc_fingerprint", "term_doc_freq")) {
       val ops = executedOperators(SparkEntry.queries(name)(spark, docsParquet))
       // its kernel runs, above the exchange
       assert(anyExpression(ops)(isKernel), name)
@@ -438,7 +473,7 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       "lang_dist"        -> Seq(1, 0, 2, 0, 0, 0, 1, 2),
       "doc_fingerprint"  -> Seq(1, 0, 1, 0, 0, 0, 1, 0),
       "dedup_exact"      -> Seq(1, 0, 2, 0, 0, 0, 1, 2),
-      "term_doc_freq"    -> Seq(1, 1, 3, 1, 1, 0, 1, 5))
+      "term_doc_freq"    -> Seq(1, 2, 2, 1, 1, 0, 3, 2))
     val actual = SparkEntry.queries.map { case (name, fn) =>
       val ops = executedOperators(fn(spark, docsParquet))
       name -> kinds.map { case (_, isKind) => ops.count(isKind) }
@@ -448,12 +483,29 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(counts === expected(name), s"$name: ${kinds.map(_._1).zip(counts)}")
   }
 
-  test("termDocFreq executes one scan and one Generate (exchange reuse)") {
-    val tdf = TfIdfOps.termDocFreq(spark.read.parquet(s"$docsParquet/documents.parquet"))
+  test("term_doc_freq plan: one scan through the reused input exchange, no (doc_id, term) shuffle") {
+    val tdf = SparkEntry.queries("term_doc_freq")(spark, docsParquet)
     assert(tdf.queryExecution.analyzed.collect { case h: ResolvedHint => h }.isEmpty)
     val ops = executedOperators(tdf)
     assert(ops.count(_.isInstanceOf[FileSourceScanExec]) === 1)
-    assert(ops.count(_.isInstanceOf[GenerateExec]) === 1)
-    assert(ops.exists(_.isInstanceOf[ReusedExchangeExec]))
+    // df's branch reads tf's range exchange of (doc_id, text) again
+    val reused = ops.collect { case r: ReusedExchangeExec => r.child }
+    assert(reused.exists(e => e.outputPartitioning.isInstanceOf[RangePartitioning] &&
+      e.output.map(_.name) === Seq("doc_id", "text")), reused)
+    def names(es: Seq[Expression]): Set[String] = es.flatMap(_.references.map(_.name)).toSet
+    val partitionings = ops.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+    assert(!partitionings.exists {
+      case h: HashPartitioning => Set("doc_id", "term").subsetOf(names(h.expressions))
+      case _ => false
+    }, partitionings)
+    assert(!partitionings.exists {
+      case r: RangePartitioning => names(r.ordering).contains("term")
+      case _ => false
+    }, partitionings)
+    assert(!ops.exists(_.isInstanceOf[WindowExec]))
+    assert(!ops.exists {
+      case a: BaseAggregateExec => a.aggregateExpressions.exists(_.exists(_.isInstanceOf[CaseWhen]))
+      case _ => false
+    })
   }
 }
