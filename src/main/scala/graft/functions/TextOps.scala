@@ -206,11 +206,16 @@ object TextOps {
     new GenericArrayData(out.toArray)
   }
 
+  /** Byte order of [[UTF8String]]s. Not `compareTo`, which reads the
+    * environment on every call and throws when Spark's testing flag is set. */
+  private val ByBytes: java.util.Comparator[AnyRef] =
+    (a, b) => a.asInstanceOf[UTF8String].binaryCompare(b.asInstanceOf[UTF8String])
+
   /** The distinct [[cleanLowered]] tokens of already-lowered text, each with
-    * its count: the tokens sorted, then counted run by run. */
+    * its count: the tokens sorted by bytes, then counted run by run. */
   def termCountsLowered(lowered: UTF8String): ArrayData = {
     val terms = cleanLowered(lowered).array.asInstanceOf[Array[AnyRef]]
-    java.util.Arrays.sort(terms)
+    java.util.Arrays.sort(terms, ByBytes)
     val out = ArrayBuffer.empty[Any]
     var i = 0
     while (i < terms.length) {

@@ -43,8 +43,10 @@ object CorpusOps {
     docs.filter(keywordPredicate(col("text"), col("lang")))
       .select(col("doc_id"), col("lang"))
 
+  // DuckDB 1.0 lowers İ (U+0130) to `i`; Java and Python add U+0307 to it.
   val keywordFilterSql: String = {
-    val likes = Keywords.map(k => s"lower(text) LIKE '%$k%'").mkString(" OR ")
+    val lowered = "lower(replace(text, chr(304), 'i' || chr(775)))"
+    val likes = Keywords.map(k => s"$lowered LIKE '%$k%'").mkString(" OR ")
     s"""SELECT doc_id, lang FROM documents
        |WHERE lang = 'en' AND ($likes)
        |ORDER BY doc_id""".stripMargin

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 import java.util.Comparator
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, CaseWhen, Expression, RegExpReplace, StringSplit}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
@@ -15,6 +16,7 @@ import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -97,6 +99,20 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       .repartition(3).write.parquet(s"$dataDir/documents.parquet")
     dataDir.toString
   }
+
+  /** [[docs]] as a `documents` table of one parquet file, which Spark
+    * scans as one split. Returns the table's directory. */
+  private lazy val docsOneFile: String = {
+    val dir = s"$dataDir/one-file"
+    spark.read.parquet(s"$docsParquet/documents.parquet")
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  /** How many partitions Spark plans for the `documents` scan under `dir`. */
+  private def scanPartitions(dir: String): Int =
+    spark.read.schema(SparkEntry.DocumentsSchema).parquet(s"$dir/documents.parquet")
+      .queryExecution.toRdd.getNumPartitions
 
   /** Every physical operator of an executed plan, through AQE query stages;
     * a reused exchange counts once, as itself. */
@@ -400,11 +416,12 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       "dedup_exact" -> CorpusOps.dedupExact(inferred).orderBy("keep_id"),
       "term_doc_freq" -> TfIdfOps.termDocFreq(inferred).orderBy("doc_id", "term"))
     assert(SparkEntry.queries.keySet === operatorThenSort.keySet)
-    for ((name, fn) <- SparkEntry.queries) {
-      val edge = fn(spark, docsParquet)
+    // on several splits and on one split: the same rows in the same order
+    for (dir <- Seq(docsParquet, docsOneFile); (name, fn) <- SparkEntry.queries) {
+      val edge = fn(spark, dir)
       val reference = operatorThenSort(name)
-      assert(edge.schema === reference.schema, name)
-      assert(edge.collect().toSeq === reference.collect().toSeq, name)
+      assert(edge.schema === reference.schema, s"$name on $dir")
+      assert(edge.collect().toSeq === reference.collect().toSeq, s"$name on $dir")
     }
     // the corpus really reaches the edge cases: "" and NULL clean_text rows
     val clean = SparkEntry.queries("clean_text")(spark, docsParquet).collect()
@@ -451,17 +468,18 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet").schema)
   }
 
+  /** The operator kinds perfbench's trace counts as plan.*, in order. */
+  private val kinds: Seq[(String, SparkPlan => Boolean)] = Seq(
+    "filescan" -> (_.isInstanceOf[FileSourceScanExec]),
+    "generate" -> (_.isInstanceOf[GenerateExec]),
+    "exchange" -> (_.isInstanceOf[ShuffleExchangeExec]),
+    "reused_exchange" -> (_.isInstanceOf[ReusedExchangeExec]),
+    "broadcast_exchange" -> (_.isInstanceOf[BroadcastExchangeExec]),
+    "window" -> (_.isInstanceOf[WindowExec]),
+    "sort" -> (_.isInstanceOf[SortExec]),
+    "hash_agg" -> (_.isInstanceOf[HashAggregateExec]))
+
   test("plan shapes: per-query physical operator counts == the table") {
-    // the operator kinds perfbench's trace counts as plan.*
-    val kinds: Seq[(String, SparkPlan => Boolean)] = Seq(
-      "filescan" -> (_.isInstanceOf[FileSourceScanExec]),
-      "generate" -> (_.isInstanceOf[GenerateExec]),
-      "exchange" -> (_.isInstanceOf[ShuffleExchangeExec]),
-      "reused_exchange" -> (_.isInstanceOf[ReusedExchangeExec]),
-      "broadcast_exchange" -> (_.isInstanceOf[BroadcastExchangeExec]),
-      "window" -> (_.isInstanceOf[WindowExec]),
-      "sort" -> (_.isInstanceOf[SortExec]),
-      "hash_agg" -> (_.isInstanceOf[HashAggregateExec]))
     // final AQE plan over docsParquet, one count per kind above, in order
     val expected: Map[String, Seq[Int]] = Map(
       "word_freq_top20"  -> Seq(1, 1, 1, 0, 0, 0, 0, 2),
@@ -507,5 +525,54 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       case a: BaseAggregateExec => a.aggregateExpressions.exists(_.exists(_.isInstanceOf[CaseWhen]))
       case _ => false
     })
+  }
+
+  test("docsParquet scans as several splits, docsOneFile as one") {
+    // the plan tests above pin the several-split plans only while this holds
+    assert(scanPartitions(docsParquet) >= 2)
+    assert(scanPartitions(docsOneFile) === 1)
+  }
+
+  test("one-split plan shapes: per-query operator counts == the table, no shuffle") {
+    // final plan over docsOneFile: the one partition satisfies every sort
+    // and aggregate, so only term_doc_freq's broadcast of df is an exchange
+    val expected: Map[String, Seq[Int]] = Map(
+      "word_freq_top20"  -> Seq(1, 1, 0, 0, 0, 0, 0, 2),
+      "word_freq_top200" -> Seq(1, 1, 0, 0, 0, 0, 0, 2),
+      "clean_text"       -> Seq(1, 0, 0, 0, 0, 0, 1, 0),
+      "word_count"       -> Seq(1, 1, 0, 0, 0, 0, 1, 0),
+      "keyword_filter"   -> Seq(1, 0, 0, 0, 0, 0, 1, 0),
+      "doc_stats"        -> Seq(1, 0, 0, 0, 0, 0, 1, 0),
+      "lang_dist"        -> Seq(1, 0, 0, 0, 0, 0, 1, 2),
+      "doc_fingerprint"  -> Seq(1, 0, 0, 0, 0, 0, 1, 0),
+      "dedup_exact"      -> Seq(1, 0, 0, 0, 0, 0, 1, 2),
+      "term_doc_freq"    -> Seq(2, 2, 0, 0, 1, 0, 3, 2))
+    val ops = SparkEntry.queries.map { case (name, fn) =>
+      name -> executedOperators(fn(spark, docsOneFile)) }
+    val actual = ops.map { case (name, o) => name -> kinds.map { case (_, isKind) => o.count(isKind) } }
+    assert(actual.keySet === expected.keySet, actual)
+    for ((name, counts) <- actual)
+      assert(counts === expected(name), s"$name: ${kinds.map(_._1).zip(counts)}")
+    // column pruning reaches the scan through the coalesce: no query reads `source`
+    for ((name, o) <- ops; scan <- o.collect { case s: FileSourceScanExec => s })
+      assert(!scan.requiredSchema.fieldNames.contains("source"), name)
+    // and so does filter pushdown: keyword_filter's lang = 'en'
+    val kwScan = ops("keyword_filter").collect { case s: FileSourceScanExec => s }.head
+    assert(kwScan.dataFilters.exists(_.references.map(_.name).toSet == Set("lang")), kwScan.dataFilters)
+  }
+
+  test("termCounts kernel sorts by bytes without UTF8String.compareTo, which throws under spark.testing") {
+    val before = System.getProperty("spark.testing")
+    System.setProperty("spark.testing", "true")
+    try {
+      val counts = TextOps.termCountsLowered(UTF8String.fromString("zeta beta zeta éclair beta zeta"))
+        .toObjectArray(StructType.fromDDL("term STRING, tf BIGINT"))
+        .map { case r: InternalRow => (r.getUTF8String(0).toString, r.getLong(1)) }.toSeq
+      // é is not in [a-z], so "éclair" cleans to "clair"
+      assert(counts === Seq("beta" -> 2L, "clair" -> 1L, "zeta" -> 3L))
+    } finally {
+      if (before == null) System.clearProperty("spark.testing")
+      else System.setProperty("spark.testing", before)
+    }
   }
 }
