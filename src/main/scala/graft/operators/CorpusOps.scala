@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextOps
 
@@ -25,44 +25,36 @@ import graft.functions.TextOps
   */
 object CorpusOps {
 
-  /** F1: ≤8-keyword OR predicate + language equality, mirroring the
-    * reference's `(kw1 OR …) lang:en` server-side query (app.py:83-89).
-    * Keywords are compile-time literals → Catalyst folds them into a
-    * codegen'd chain of `Contains`; the predicate pushes into the scan.
-    */
   val Keywords: Seq[String] = Seq(
     "spark", "stream", "query", "join", "window", "vector", "hash",
     "merge", "shuffle", "extra").take(8) // T4: truncate to 8 (app.py:89)
 
-  def keywordPredicate(text: Column, lang: Column): Column = {
-    val lowered = lower(text) // evaluate once; don't rely on CSE to rescue 8 copies
-    lang === "en" && Keywords.map(lowered.contains(_)).reduce(_ || _)
-  }
-
+  /** F1: ≤8-keyword OR predicate + language equality, mirroring the
+    * reference's `(kw1 OR …) lang:en` server-side query (app.py:83-89).
+    * Each OR branch lowers `text` again (8 `Lower`s in the executed Filter).
+    * One `lower(text).rlike(k1|…|k8)` lowers once but measured slower: a
+    * `per_doc` `report_cpu_s_p50` median of 1.348 s here, 1.498 s with it
+    * (+11 %, higher in 9 of 10 alternating pairs), though the predicate alone
+    * cost the same process CPU (280 vs 270 ms, median of 40 alternations).
+    * The cause is unknown; retry `rlike` only with a new measurement. */
   def keywordFilter(docs: DataFrame): DataFrame =
-    docs.filter(keywordPredicate(col("text"), col("lang")))
+    docs.filter(col("lang") === "en" &&
+        Keywords.map(lower(col("text")).contains(_)).reduce(_ || _))
       .select(col("doc_id"), col("lang"))
 
-  // DuckDB 1.0 lowers İ (U+0130) to `i`; Java and Python add U+0307 to it.
   val keywordFilterSql: String = {
-    val lowered = "lower(replace(text, chr(304), 'i' || chr(775)))"
-    val likes = Keywords.map(k => s"$lowered LIKE '%$k%'").mkString(" OR ")
+    val likes = Keywords.map(k => s"${TextOps.lowerSql} LIKE '%$k%'").mkString(" OR ")
     s"""SELECT doc_id, lang FROM documents
        |WHERE lang = 'en' AND ($likes)
        |ORDER BY doc_id""".stripMargin
   }
 
-  /** P8 + F2: cleaned word count per doc, empty docs dropped.
-    *
-    * The word_count column is emitted through `explode(array(...))` — a
-    * one-row Generate — purely as an optimizer barrier: a plain
-    * `select(wc).filter(wc > 0)` gets the predicate pushed through the
-    * projection by substitution, so the whole regex+tokenize+stopword
-    * chain is evaluated TWICE per row (once in Filter, once in Project).
-    * Predicates on generator output are not pushed below a Generate, so
-    * this shape evaluates the chain exactly once per document. Same rows,
-    * same schema.
-    */
+  /** P8 + F2: cleaned word count per doc, empty docs dropped. The count goes
+    * through `explode(array(...))`, a one-row Generate, only as an optimizer
+    * barrier: a plain `select(wc).filter(wc > 0)` has the predicate
+    * substituted through the projection, and its plan calls the
+    * [[TextOps.cleanLowered]] kernel 3 times. A predicate on generator output
+    * is not pushed below the Generate, so this shape calls it once. */
   def wordCounts(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
         explode(array(TextOps.wordCount(col("text")))).as("word_count"))
@@ -106,12 +98,11 @@ object CorpusOps {
     )
   }
 
-  // DuckDB 1.0 lowers İ (U+0130) to `i`; Java and Python add U+0307 to it.
   val docStatsSql: String =
     s"""WITH t AS (
        |  SELECT doc_id, length(text) AS n_chars,
        |    list_filter(string_split_regex(
-       |      lower(replace(text, chr(304), 'i' || chr(775))), '${TextOps.WsRe}'),
+       |      ${TextOps.lowerSql}, '${TextOps.WsRe}'),
        |      w -> w <> '') AS toks
        |  FROM documents),
        |s AS (

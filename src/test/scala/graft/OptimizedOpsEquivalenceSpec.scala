@@ -84,7 +84,9 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       // combining dot, which the non-alpha strip drops)
       (23L, "\u212Aelvin \u0130stanbul", "tr"),
       // the URL is cut before mentions are skipped: not "keep xyz"
-      (24L, "keep @abhttp://xyz", "en")
+      (24L, "keep @abhttp://xyz", "en"),
+      // lowercase first: the combining dot of the lowered İ ends the mention
+      (25L, "@\u0130stanbul rocks", "tr")
     )
     spark.createDataFrame(rows).toDF("doc_id", "text", "lang")
       .withColumn("n_chars", length(col("text")))
@@ -263,6 +265,7 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cleaned(22L) === "emoji betweenwords")
     assert(cleaned(23L) === "kelvin istanbul")
     assert(cleaned(24L) === "keep")
+    assert(cleaned(25L) === "stanbul rocks")
   }
 
   test("cleanTokens kernel == three-pass formulation on 5,000 seeded generated strings") {
@@ -457,10 +460,13 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ops = executedOperators(SparkEntry.queries("doc_stats")(spark, docsParquet))
     assert(!anyExpression(ops)(e => e.isInstanceOf[ArrayFilter] ||
       e.isInstanceOf[StringSplit] || e.isInstanceOf[RegExpReplace]))
+    def calls(ops: Seq[SparkPlan], kernel: String): Int = ops.flatMap(_.expressions)
+      .map(_.collect { case s: StaticInvoke if s.functionName == kernel => s }.size).sum
     // CollapseProject must not inline the struct once per field
-    val calls = ops.flatMap(_.expressions).map(_.collect {
-      case s: StaticInvoke if s.functionName == "statsLowered" => s }.size).sum
-    assert(calls === 1)
+    assert(calls(ops, "statsLowered") === 1)
+    // word_count's Generate barrier: its Filter does not call the kernel again
+    for (dir <- Seq(docsParquet, docsOneFile)) assert(calls(executedOperators(
+      SparkEntry.queries("word_count")(spark, dir)), "cleanLowered") === 1, dir)
   }
 
   test("declared documents schema == the schema Spark infers from the fixture") {
