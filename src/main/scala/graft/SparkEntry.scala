@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.functions.TextOps
 import graft.operators.{CorpusOps, TfIdfOps}
@@ -36,13 +35,17 @@ object SparkEntry {
     if (d.queryExecution.toRdd.getNumPartitions <= 1) d.coalesce(1) else d
   }
 
-  /** One entry per implemented operator from SURVEY.md §2.
+  private case class Query(name: String, plan: DataFrame => DataFrame, sql: String)
+
+  /** One row per operator from SURVEY.md §2: its name, plan and DuckDB twin.
     *
     * Operators in `graft.operators`/`graft.functions` return UNSORTED
-    * DataFrames (no library operator embeds a global sort — a full
-    * range-partition of the corpus would be a 100 TB scale-killer).
-    * The deterministic ORDER BY that the driver's row-by-row hash compare
-    * needs is applied HERE, at the verification edge only.
+    * DataFrames, and their SQL twins unsorted rows (no library operator
+    * embeds a global sort — a full range-partition of the corpus would be a
+    * 100 TB scale-killer). Each row adds the deterministic order that the
+    * driver's row-by-row hash compare needs to its plan and to its twin
+    * alike, at the verification edge only; top-K word frequency orders and
+    * limits inside the operator, on both sides.
     *
     * Edge rule: a per-row projection sorts its narrow INPUT, not its
     * output. A global sort is a range-partition exchange, and range
@@ -63,43 +66,42 @@ object SparkEntry {
     * term_doc_freq's broadcast of df remains, and it scans its input once
     * per branch. The results, and their order, are the same on both.
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private val table: Seq[Query] = Seq(
     // A7/T2/T3 + P1-P5,P7,F3,F4: global word frequency, chart top-20.
-    "word_freq_top20" -> ((s, dir) => TextOps.wordFreq(docs(s, dir), 20)),
+    Query("word_freq_top20", TextOps.wordFreq(_, 20), TextOps.wordFreqSql(20)),
     // A7/T2: the reference's full top-200 result table (app.py:169).
-    "word_freq_top200" -> ((s, dir) => TextOps.wordFreq(docs(s, dir), 200)),
+    Query("word_freq_top200", TextOps.wordFreq(_, 200), TextOps.wordFreqSql(200)),
     // P1-P5,P7,F3,F4: the clean_text projection (app.py:46-57).
-    "clean_text" -> ((s, dir) => CorpusOps.cleanTexts(docs(s, dir).orderBy("doc_id"))),
+    Query("clean_text", d => CorpusOps.cleanTexts(d.orderBy("doc_id")),
+      s"${CorpusOps.cleanTextsSql} ORDER BY doc_id"),
     // P8+F2: derived word count, empty docs dropped (app.py:115,117).
-    "word_count" -> ((s, dir) => CorpusOps.wordCounts(docs(s, dir).orderBy("doc_id"))),
+    Query("word_count", d => CorpusOps.wordCounts(d.orderBy("doc_id")),
+      s"${CorpusOps.wordCountsSql} ORDER BY doc_id"),
     // F1+T4: keyword OR predicate + lang filter (app.py:83-89).
-    "keyword_filter" -> ((s, dir) => CorpusOps.keywordFilter(docs(s, dir)).orderBy("doc_id")),
+    Query("keyword_filter", d => CorpusOps.keywordFilter(d).orderBy("doc_id"),
+      s"${CorpusOps.keywordFilterSql} ORDER BY doc_id"),
     // Text-quality scoring (north-star corpus filtering).
-    "doc_stats" -> ((s, dir) => CorpusOps.docStats(docs(s, dir).orderBy("doc_id"))),
+    Query("doc_stats", d => CorpusOps.docStats(d.orderBy("doc_id")),
+      s"${CorpusOps.docStatsSql} ORDER BY doc_id"),
     // Corpus stats per language (exact bigint sums).
-    "lang_dist" -> ((s, dir) => CorpusOps.langDist(docs(s, dir)).orderBy("lang")),
+    Query("lang_dist", d => CorpusOps.langDist(d).orderBy("lang"),
+      s"${CorpusOps.langDistSql} ORDER BY lang"),
     // Document fingerprinting (md5 of cleaned text).
-    "doc_fingerprint" -> ((s, dir) => CorpusOps.fingerprints(docs(s, dir).orderBy("doc_id"))),
+    Query("doc_fingerprint", d => CorpusOps.fingerprints(d.orderBy("doc_id")),
+      s"${CorpusOps.fingerprintsSql} ORDER BY doc_id"),
     // Exact dedup: deterministic survivor + dup count per fingerprint.
-    "dedup_exact" -> ((s, dir) => CorpusOps.dedupExact(docs(s, dir)).orderBy("keep_id")),
+    Query("dedup_exact", d => CorpusOps.dedupExact(d).orderBy("keep_id"),
+      s"${CorpusOps.dedupExactSql} ORDER BY keep_id"),
     // A2+A3: per-doc term frequency ⋈ per-term document frequency — the
     // relational spine of TF-IDF (app.py:156-157).
-    "term_doc_freq" -> ((s, dir) =>
-      TfIdfOps.termDocFreq(docs(s, dir).orderBy("doc_id")).orderBy("doc_id", "term"))
+    Query("term_doc_freq", d => TfIdfOps.termDocFreq(d.orderBy("doc_id")).orderBy("doc_id", "term"),
+      s"${TfIdfOps.termDocFreqSql} ORDER BY doc_id, term")
   )
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "word_freq_top20" -> TextOps.wordFreqSql(20),
-    "word_freq_top200" -> TextOps.wordFreqSql(200),
-    "clean_text" -> CorpusOps.cleanTextsSql,
-    "word_count" -> CorpusOps.wordCountsSql,
-    "keyword_filter" -> CorpusOps.keywordFilterSql,
-    "doc_stats" -> CorpusOps.docStatsSql,
-    "lang_dist" -> CorpusOps.langDistSql,
-    "doc_fingerprint" -> CorpusOps.fingerprintsSql,
-    "dedup_exact" -> CorpusOps.dedupExactSql,
-    "term_doc_freq" -> TfIdfOps.termDocFreqSql
-  )
+  /** Each query's plan over `documents` as [[docs]] reads it from `dir`. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    table.map(q => q.name -> ((s: SparkSession, dir: String) => q.plan(docs(s, dir)))).toMap
+
+  /** Each query's DuckDB twin, run on the same parquet tables. */
+  def oracleSql: Map[String, String] = table.map(q => q.name -> q.sql).toMap
 }

@@ -10,10 +10,10 @@ import graft.functions.TextOps
   * Spark-first design notes (100 TB posture):
   *  - every op is a narrow projection or a single hash-aggregate; no
   *    driver-side collection, no cross joins;
-  *  - operators return UNSORTED DataFrames — a library operator must not
-  *    embed a global range-partition sort; the deterministic ORDER BY the
-  *    DuckDB-oracle hash compare needs is applied at the query-registration
-  *    edge ([[graft.SparkEntry]]) only;
+  *  - operators and their SQL twins return UNSORTED rows — a library
+  *    operator must not embed a global range-partition sort; the order the
+  *    DuckDB-oracle hash compare needs is added to both at the
+  *    query-registration edge ([[graft.SparkEntry]]) only;
   *  - fingerprint-based dedup groups on a 128-bit md5 of the *cleaned*
   *    text, so the shuffle key is 32 bytes regardless of document size;
   *  - `min(doc_id)` (not `dropDuplicates`) picks the survivor so results
@@ -45,8 +45,7 @@ object CorpusOps {
   val keywordFilterSql: String = {
     val likes = Keywords.map(k => s"${TextOps.lowerSql} LIKE '%$k%'").mkString(" OR ")
     s"""SELECT doc_id, lang FROM documents
-       |WHERE lang = 'en' AND ($likes)
-       |ORDER BY doc_id""".stripMargin
+       |WHERE lang = 'en' AND ($likes)""".stripMargin
   }
 
   /** P8 + F2: cleaned word count per doc, empty docs dropped. The count goes
@@ -64,7 +63,7 @@ object CorpusOps {
     s"""SELECT doc_id, word_count FROM (
        |  SELECT doc_id, len(${TextOps.cleanTokensSqlExpr}) AS word_count
        |  FROM documents)
-       |WHERE word_count > 0 ORDER BY doc_id""".stripMargin
+       |WHERE word_count > 0""".stripMargin
 
   /** clean_text as an oracle-checked per-doc projection (P1-P5, P7, F3,
     * F4). The reference's lemmatizer (app.py:54) is not built. */
@@ -73,7 +72,7 @@ object CorpusOps {
 
   val cleanTextsSql: String =
     s"""SELECT doc_id, ${TextOps.cleanTextSqlExpr} AS clean_text
-       |FROM documents ORDER BY doc_id""".stripMargin
+       |FROM documents""".stripMargin
 
   /** Text-quality scoring: token counts, distinct/stopword ratios and a
     * bounded composite score — the length/stopword-ratio heuristics a
@@ -123,7 +122,7 @@ object CorpusOps {
        |    THEN round(least(1.0, CAST(n_tokens AS DOUBLE) / 50.0) *
        |               (1.0 - CAST(n_stop AS DOUBLE) / n_tokens), 4)
        |    ELSE 0.0 END AS quality_score
-       |FROM s ORDER BY doc_id""".stripMargin
+       |FROM s""".stripMargin
 
   /** Corpus stats partitioned by language: doc counts + exact char volume
     * (bigint sums — exact, no float drift). One hash aggregate. */
@@ -136,7 +135,7 @@ object CorpusOps {
   val langDistSql: String =
     """SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
       |  CAST(SUM(n_chars) AS BIGINT) AS total_chars
-      |FROM documents GROUP BY lang ORDER BY lang""".stripMargin
+      |FROM documents GROUP BY lang""".stripMargin
 
   /** Document fingerprint: md5 of the cleaned text — the exact-dedup key.
     * 32-byte shuffle key independent of document size. */
@@ -146,7 +145,7 @@ object CorpusOps {
 
   val fingerprintsSql: String =
     s"""SELECT doc_id, md5(${TextOps.cleanTextSqlExpr}) AS fp
-       |FROM documents ORDER BY doc_id""".stripMargin
+       |FROM documents""".stripMargin
 
   /** Exact dedup over cleaned text: one surviving doc_id (deterministic
     * `min`) + duplicate count per fingerprint group. Equivalent capability
@@ -159,7 +158,6 @@ object CorpusOps {
 
   val dedupExactSql: String =
     s"""SELECT min(doc_id) AS keep_id, COUNT(*) AS dup_cnt
-       |FROM (SELECT doc_id, md5(${TextOps.cleanTextSqlExpr}) AS fp
-       |      FROM documents)
-       |GROUP BY fp ORDER BY keep_id""".stripMargin
+       |FROM ($fingerprintsSql)
+       |GROUP BY fp""".stripMargin
 }

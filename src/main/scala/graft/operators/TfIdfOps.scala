@@ -33,6 +33,5 @@ object TfIdfOps {
        |df AS (SELECT term, COUNT(DISTINCT doc_id) AS df
        |       FROM toks GROUP BY term)
        |SELECT tf.doc_id, tf.term, tf.tf, df.df
-       |FROM tf JOIN df USING (term)
-       |ORDER BY doc_id, term""".stripMargin
+       |FROM tf JOIN df USING (term)""".stripMargin
 }

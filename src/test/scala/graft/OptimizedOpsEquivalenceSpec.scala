@@ -86,7 +86,10 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       // the URL is cut before mentions are skipped: not "keep xyz"
       (24L, "keep @abhttp://xyz", "en"),
       // lowercase first: the combining dot of the lowered İ ends the mention
-      (25L, "@\u0130stanbul rocks", "tr")
+      (25L, "@\u0130stanbul rocks", "tr"),
+      // a word-final capital sigma lowers to final sigma (U+03C2), as in
+      // Python: three distinct tokens, and no Greek letter survives cleaning
+      (26L, "ΟΔΟΣ οδοσ word", "el")
     )
     spark.createDataFrame(rows).toDF("doc_id", "text", "lang")
       .withColumn("n_chars", length(col("text")))
@@ -266,6 +269,7 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cleaned(23L) === "kelvin istanbul")
     assert(cleaned(24L) === "keep")
     assert(cleaned(25L) === "stanbul rocks")
+    assert(cleaned(26L) === "word")
   }
 
   test("cleanTokens kernel == three-pass formulation on 5,000 seeded generated strings") {
@@ -343,6 +347,10 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("docStats kernel == transform+aggregate formulation") {
     assertSameResult(CorpusOps.docStats(docs), plainDocStats(docs))
+    // the final sigma row: οδος and οδοσ are two tokens, as Python counts
+    // them (the DuckDB oracle counts one: see TextOps.lowerSql)
+    val greek = CorpusOps.docStats(docs).where(col("doc_id") === 26L).head()
+    assert((greek.getAs[Int]("n_tokens"), greek.getAs[Int]("n_distinct")) === ((3, 3)))
   }
 
   test("docStats kernel == regex sum_len two-level formulation") {
@@ -419,6 +427,7 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       "dedup_exact" -> CorpusOps.dedupExact(inferred).orderBy("keep_id"),
       "term_doc_freq" -> TfIdfOps.termDocFreq(inferred).orderBy("doc_id", "term"))
     assert(SparkEntry.queries.keySet === operatorThenSort.keySet)
+    assert(SparkEntry.oracleSql.keySet === operatorThenSort.keySet)
     // on several splits and on one split: the same rows in the same order
     for (dir <- Seq(docsParquet, docsOneFile); (name, fn) <- SparkEntry.queries) {
       val edge = fn(spark, dir)
