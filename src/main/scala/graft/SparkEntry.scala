@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.StructType
 import graft.functions.TextOps
 import graft.operators.{CorpusOps, TfIdfOps}
@@ -24,15 +26,30 @@ object SparkEntry {
   /** `documents`, read through [[DocumentsSchema]]. A table that Spark
     * plans as one split comes back as `coalesce(1)`, which reports a single
     * partition: then every edge sort and aggregate is satisfied as it is,
-    * and no query plans a shuffle or a range-sampling re-scan. Planning the
-    * scan to count its splits builds its RDD and runs no job. The rule
+    * and no query plans a shuffle or a range-sampling re-scan. The rule
     * cannot take scan parallelism away: it fires only where the scan is one
     * task already, and Spark splits a file of more than about
     * `max(spark.sql.files.openCostInBytes, bytes / cores)` into several.
     * Column pruning and filter pushdown pass through the coalesce. */
   private def docs(s: SparkSession, dir: String): DataFrame = {
     val d = s.read.schema(DocumentsSchema).parquet(s"$dir/documents.parquet")
-    if (d.queryExecution.toRdd.getNumPartitions <= 1) d.coalesce(1) else d
+    if (oneSplit(d)) d.coalesce(1) else d
+  }
+
+  /** Whether Spark plans the file read `d` as at most one split. It counts
+    * the splits as `FileSourceScanExec` does, with the same three calls, on
+    * the file listing that the read's relation cached: no second planning
+    * of the read, no file-system call, no job. */
+  private[graft] def oneSplit(d: DataFrame): Boolean = d.queryExecution.analyzed match {
+    case LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
+      val listing = r.location.listFiles(Nil, Nil)
+      val maxSplitBytes = FilePartition.maxSplitBytes(r.sparkSession, listing)
+      val splits = listing.flatMap(dir => dir.files.flatMap { f =>
+        val path = f.getPath
+        PartitionedFileUtil.splitFiles(f, path,
+          r.fileFormat.isSplitable(r.sparkSession, r.options, path), maxSplitBytes, dir.values)
+      }).sortBy(-_.length)
+      FilePartition.getFilePartitions(r.sparkSession, splits, maxSplitBytes).size <= 1
   }
 
   private case class Query(name: String, plan: DataFrame => DataFrame, sql: String)

@@ -19,13 +19,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Everything is a codegen'd Catalyst expression (no UDFs), so each query's
   * chain fuses into one WholeStageCodegen stage and the scan prunes to
-  * `text`. The per-row text work is three byte kernels over Spark's own
-  * `lower(text)`, each one `StaticInvoke`: [[cleanLowered]] (the clean
-  * chain) and [[statsLowered]] (doc_stats' counts) walk the whitespace
-  * tokens, and [[termCountsLowered]] (term_doc_freq's per-document tf)
-  * counts the tokens of [[cleanLowered]]. Everything else is composed from
-  * `org.apache.spark.sql.functions` built-ins. The reference's lemmatizer
-  * (app.py:54) is not built.
+  * `text`. The per-row text work is byte kernels, each one `StaticInvoke`
+  * (see [[kernel]]): [[cleanRaw]] (the clean chain) and [[termCountsRaw]]
+  * (term_doc_freq's per-document tf, built on [[cleanRaw]]) read raw `text`
+  * and lower it as they scan, and so does keyword_filter's
+  * `CorpusOps.keywordHitRaw`, through [[lowerStartsWith]]. Lowering raw
+  * bytes is exact for them because only two non-ASCII code points lower to
+  * anything ASCII (see [[isKelvin]]). [[statsLowered]] (doc_stats' counts)
+  * reads Spark's own `lower(text)`: its distinct counts and token lengths
+  * depend on the case mapping of every letter, not only of the ASCII ones.
+  * Everything else is composed from `org.apache.spark.sql.functions`
+  * built-ins. The reference's lemmatizer (app.py:54) is not built.
   */
 object TextOps {
 
@@ -81,7 +85,7 @@ object TextOps {
 
   /** P1–P4 as the reference's three sequential passes (app.py:48-50):
     * lowercase, then URL strip, then mention strip, then non-alpha strip.
-    * The same chain as [[normalizeSqlExpr]] and as the [[cleanLowered]]
+    * The same chain as [[normalizeSqlExpr]] and as the [[cleanRaw]]
     * kernel; the engine's queries use the kernel, not this. */
   def normalize(c: Column): Column =
     regexp_replace(regexp_replace(regexp_replace(lower(c),
@@ -98,7 +102,7 @@ object TextOps {
 
   /** SQL twin of [[normalize]] over column `text`: the same three
     * sequential passes. The engine computes this chain with the
-    * [[cleanLowered]] kernel, not with these regexes, so the DuckDB hash
+    * [[cleanRaw]] kernel, not with these regexes, so the DuckDB hash
     * compare checks the kernel against an independent implementation. */
   val normalizeSqlExpr: String =
     s"regexp_replace(regexp_replace(regexp_replace($lowerSql, " +
@@ -125,22 +129,26 @@ object TextOps {
 
   /** Full cleaned token array of a raw-text column. NULL in, NULL out. */
   def cleanTokens(c: Column): Column =
-    lowered("cleanLowered", ArrayType(StringType, containsNull = false), c)
+    kernel(this, "cleanRaw", ArrayType(StringType, containsNull = false), c)
 
   /** Each document's term frequencies: one `(term, tf)` struct per distinct
     * [[cleanTokens]] token of a raw-text column. NULL in, NULL out. */
-  def termCounts(c: Column): Column = lowered("termCountsLowered", ArrayType(
+  def termCounts(c: Column): Column = kernel(this, "termCountsRaw", ArrayType(
     StructType.fromDDL("term STRING NOT NULL, tf BIGINT NOT NULL"), containsNull = false), c)
 
-  /** doc_stats' token counts of a raw-text column. NULL in, NULL out. */
-  def tokenStats(c: Column): Column = lowered("statsLowered",
-    StructType.fromDDL("n_tokens INT, n_distinct INT, n_stop INT, sum_len INT"), c)
+  /** doc_stats' token counts of a raw-text column, over Spark's `lower(c)`.
+    * NULL in, NULL out. */
+  def tokenStats(c: Column): Column = kernel(this, "statsLowered",
+    StructType.fromDDL("n_tokens INT, n_distinct INT, n_stop INT, sum_len INT"), lower(c))
 
-  /** The byte kernel `kernel` of this object over Spark's own `lower(c)`, as
-    * one codegen'd `StaticInvoke`: no UDF, no Java-string round trip. */
-  private def lowered(kernel: String, dataType: DataType, c: Column): Column =
-    ExpressionBridge.column(StaticInvoke(getClass, dataType, kernel,
-      Seq(ExpressionBridge.expression(lower(c))), returnNullable = false))
+  /** The byte kernel `name` of object `obj` over `arg`, as one codegen'd
+    * `StaticInvoke`: no UDF, no Java-string round trip. A kernel named
+    * `…Raw` takes raw text and lowers the bytes it looks at itself, which
+    * saves Spark's `lower` a pass over the text and a copy of it; one named
+    * `…Lowered` takes `lower(text)`. */
+  private[graft] def kernel(obj: AnyRef, name: String, dataType: DataType, arg: Column): Column =
+    ExpressionBridge.column(StaticInvoke(obj.getClass, dataType, name,
+      Seq(ExpressionBridge.expression(arg)), returnNullable = false))
 
   private val Stopwords = new java.util.HashSet[UTF8String]()
   NltkStopwords.foreach(w => Stopwords.add(UTF8String.fromString(w)))
@@ -151,6 +159,43 @@ object TextOps {
   private def isWord(b: Byte): Boolean = // ASCII \w, as in Java and RE2
     (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9') || b == '_'
 
+  private def lowerAscii(b: Byte): Byte = if (b >= 'A' && b <= 'Z') (b | 0x20).toByte else b
+
+  /** Whether the character at `in(i)` is the Kelvin sign U+212A (UTF-8
+    * `E2 84 AA`), which lowers to ASCII `k`.
+    *
+    * It and `İ` ([[isCapitalDottedI]]) are the only code points of U+0080
+    * and up whose lowercase holds an ASCII character, with ICU case mapping
+    * on or off (a test lowers every one of them). Every other one lowers to
+    * non-ASCII code points only, which are never whitespace, `[a-z]` or
+    * `\w`. So a kernel reads the lowered text of raw UTF-8 bytes exactly by
+    * lowering `A`-`Z`, mapping these two characters, and taking every other
+    * byte as it is: no ASCII byte occurs inside a multi-byte sequence. */
+  private def isKelvin(in: Array[Byte], i: Int): Boolean =
+    i + 2 < in.length && in(i) == 0xE2.toByte && in(i + 1) == 0x84.toByte && in(i + 2) == 0xAA.toByte
+
+  /** Whether the character at `in(i)` is `İ` U+0130 (UTF-8 `C4 B0`), which
+    * lowers to `i` followed by U+0307, a combining dot that is neither a
+    * letter nor `\w`: a `\w` run or a keyword can end at that `i`, not go
+    * on past it. */
+  private def isCapitalDottedI(in: Array[Byte], i: Int): Boolean =
+    i + 1 < in.length && in(i) == 0xC4.toByte && in(i + 1) == 0xB0.toByte
+
+  /** Whether the lowered text of the raw UTF-8 bytes `in`, at the character
+    * that starts at `in(p)`, starts with `word`, which is lowercase ASCII. */
+  private[graft] def lowerStartsWith(in: Array[Byte], p: Int, word: Array[Byte]): Boolean = {
+    var q = p
+    var j = 0
+    var matched = true
+    while (matched && j < word.length) {
+      if (q < in.length && lowerAscii(in(q)) == word(j)) q += 1
+      else if (word(j) == 'k' && isKelvin(in, q)) q += 3
+      else matched = j == word.length - 1 && word(j) == 'i' && isCapitalDottedI(in, q)
+      j += 1
+    }
+    matched
+  }
+
   /** End of the token at `from`: its first whitespace index, or `in.length`. */
   private def tokenEnd(in: Array[Byte], from: Int): Int = {
     var i = from
@@ -158,31 +203,43 @@ object TextOps {
     i
   }
 
-  /** Start of the first [[UrlRe]] match in the token `in(from until end)`,
-    * or `end`: `http` or `www` and one more byte (`https` implies `http`). */
+  /** Start of the first [[UrlRe]] match in the lowered token of raw bytes
+    * `in(from until end)`, or `end`: `http` or `www` in either case and one
+    * more byte (`https` implies `http`). No non-ASCII character lowers to
+    * any of these letters. */
   private def urlStart(in: Array[Byte], from: Int, end: Int): Int = {
     var p = from
     while (p < end && !(
-        p + 4 < end && in(p) == 'h' && in(p + 1) == 't' && in(p + 2) == 't' && in(p + 3) == 'p' ||
-        p + 3 < end && in(p) == 'w' && in(p + 1) == 'w' && in(p + 2) == 'w')) p += 1
+        p + 4 < end && lowerAscii(in(p)) == 'h' && lowerAscii(in(p + 1)) == 't' &&
+          lowerAscii(in(p + 2)) == 't' && lowerAscii(in(p + 3)) == 'p' ||
+        p + 3 < end && lowerAscii(in(p)) == 'w' && lowerAscii(in(p + 1)) == 'w' &&
+          lowerAscii(in(p + 2)) == 'w')) p += 1
     p
   }
 
-  /** The clean chain on the UTF-8 bytes of already-lowered text. The result
-    * is exactly `filter(split(p, WsRe), keepToken)`, where `p` is the
-    * lowered text after the three regex passes of [[normalize]].
+  /** End of the `\w` run at `from` in the lowered text of raw bytes
+    * `in(from until cut)`: a lowered `İ` ends it after its `i`. */
+  private def wordRunEnd(in: Array[Byte], from: Int, cut: Int): Int = {
+    var r = from
+    while (r < cut && (isWord(in(r)) || isKelvin(in, r))) r += (if (in(r) < 0) 3 else 1)
+    if (r < cut && isCapitalDottedI(in, r)) r + 2 else r
+  }
+
+  /** The clean chain on the UTF-8 bytes of raw text, lowered as it scans.
+    * The result is exactly `filter(split(p, WsRe), keepToken)`, where `p` is
+    * the text after the lowercase and the three regex passes of
+    * [[normalize]].
     *
     * No pass deletes whitespace and a [[UrlRe]] match runs to the end of its
     * token, so each whitespace token cleans on its own: cut it at its first
     * URL, then skip each [[MentionRe]] match before the cut (`@abhttp://x`
-    * cleans to "", not "x"), keep its `[a-z]` bytes, and keep the result if
-    * it is longer than 2 and not a stopword. Bytes are exact here: ASCII
-    * bytes never occur inside a multi-byte UTF-8 sequence, every pattern
-    * literal and class member is ASCII, and every non-ASCII character is
-    * neither whitespace nor a letter in `[a-z]`.
+    * cleans to "", not "x"), keep its letters lowered to `[a-z]`, and keep
+    * the result if it is longer than 2 and not a stopword. Bytes are exact
+    * here: every pattern literal and class member is ASCII, and so is every
+    * byte the lowering changes (see [[isKelvin]]).
     */
-  def cleanLowered(lowered: UTF8String): GenericArrayData = {
-    val in = lowered.getBytes
+  def cleanRaw(text: UTF8String): GenericArrayData = {
+    val in = text.getBytes
     // buf(start until w) holds the current token's letters; a kept token is
     // a view of them (fromBytes does not copy), so the next one starts after.
     val buf = new Array[Byte](in.length)
@@ -195,13 +252,21 @@ object TextOps {
       var w = start
       var r = from
       while (r < cut) {
-        val b = in(r)
-        r += 1
-        if (b == '@') while (r < cut && isWord(in(r))) r += 1 // a MentionRe match, or a lone '@'
+        val b = lowerAscii(in(r))
+        if (b == '@') r = wordRunEnd(in, r + 1, cut) // a MentionRe match, or a lone '@'
         else if (b >= 'a' && b <= 'z') {
           buf(w) = b
           w += 1
-        }
+          r += 1
+        } else if (isKelvin(in, r)) {
+          buf(w) = 'k'
+          w += 1
+          r += 3
+        } else if (isCapitalDottedI(in, r)) { // its U+0307 is dropped
+          buf(w) = 'i'
+          w += 1
+          r += 2
+        } else r += 1
       }
       if (w - start > 2) {
         val token = UTF8String.fromBytes(buf, start, w - start)
@@ -220,10 +285,10 @@ object TextOps {
   private val ByBytes: java.util.Comparator[AnyRef] =
     (a, b) => a.asInstanceOf[UTF8String].binaryCompare(b.asInstanceOf[UTF8String])
 
-  /** The distinct [[cleanLowered]] tokens of already-lowered text, each with
-    * its count: the tokens sorted by bytes, then counted run by run. */
-  def termCountsLowered(lowered: UTF8String): ArrayData = {
-    val terms = cleanLowered(lowered).array.asInstanceOf[Array[AnyRef]]
+  /** The distinct [[cleanRaw]] tokens of raw text, each with its count: the
+    * tokens sorted by bytes, then counted run by run. */
+  def termCountsRaw(text: UTF8String): ArrayData = {
+    val terms = cleanRaw(text).array.asInstanceOf[Array[AnyRef]]
     java.util.Arrays.sort(terms, ByBytes)
     val out = ArrayBuffer.empty[Any]
     var i = 0

