@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.PartitionedFileUtil
 import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.StructType
@@ -23,17 +24,18 @@ object SparkEntry {
   private[graft] val DocumentsSchema: StructType = StructType.fromDDL(
     "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
 
-  /** `documents`, read through [[DocumentsSchema]]. A table that Spark
-    * plans as one split comes back as `coalesce(1)`, which reports a single
-    * partition: then every edge sort and aggregate is satisfied as it is,
-    * and no query plans a shuffle or a range-sampling re-scan. The rule
-    * cannot take scan parallelism away: it fires only where the scan is one
-    * task already, and Spark splits a file of more than about
-    * `max(spark.sql.files.openCostInBytes, bytes / cores)` into several.
-    * Column pruning and filter pushdown pass through the coalesce. */
-  private def docs(s: SparkSession, dir: String): DataFrame = {
+  /** `documents`, read through [[DocumentsSchema]], and whether it is one
+    * partition. A table that Spark plans as one split comes back as
+    * `coalesce(1)`, which reports a single partition: then every edge sort
+    * and aggregate is satisfied as it is, and no query plans a shuffle or a
+    * range-sampling re-scan. The rule cannot take scan parallelism away: it
+    * fires only where the scan is one task already, and Spark splits a file
+    * of more than about `max(spark.sql.files.openCostInBytes, bytes / cores)`
+    * into several. Column pruning and filter pushdown pass through the
+    * coalesce. */
+  private def docs(s: SparkSession, dir: String): (DataFrame, Boolean) = {
     val d = s.read.schema(DocumentsSchema).parquet(s"$dir/documents.parquet")
-    if (oneSplit(d)) d.coalesce(1) else d
+    if (oneSplit(d)) (d.coalesce(1), true) else (d, false)
   }
 
   /** Whether Spark plans the file read `d` as at most one split. It counts
@@ -52,73 +54,99 @@ object SparkEntry {
       FilePartition.getFilePartitions(r.sparkSession, splits, maxSplitBytes).size <= 1
   }
 
-  private case class Query(name: String, plan: DataFrame => DataFrame, sql: String)
+  /** Where the edge sorts a query by its keys on several splits: its
+    * input (by the first key), its output, or both (see [[table]]). */
+  private sealed trait Edge
+  private case object SortInput extends Edge
+  private case object SortOutput extends Edge
+  private case object SortBoth extends Edge
 
-  /** One row per operator from SURVEY.md §2: its name, plan and DuckDB twin.
+  private case class Query(name: String, plan: (DataFrame, Boolean) => DataFrame, sql: String,
+      keys: Seq[String] = Nil, edge: Edge = SortOutput) {
+    /** [[plan]] over `d`, sorted by [[keys]] as [[table]]'s edge rule says;
+      * `one` says whether `d` is one partition. */
+    def sorted(d: DataFrame, one: Boolean): DataFrame = (keys.map(col), one, edge) match {
+      case (Seq(), _, _) => plan(d, one)
+      case (k, true, SortBoth) => plan(d, one).orderBy(k: _*)
+      case (k, true, _) => plan(d, one).sortWithinPartitions(k: _*)
+      case (k, false, SortInput) => plan(d.orderBy(k.head), one)
+      case (k, false, SortOutput) => plan(d, one).orderBy(k: _*)
+      case (k, false, SortBoth) => plan(d.orderBy(k.head), one).orderBy(k: _*)
+    }
+    def sortedSql: String = if (keys.isEmpty) sql else s"$sql ORDER BY ${keys.mkString(", ")}"
+  }
+
+  /** One row per operator from SURVEY.md §2: its name, its plan over
+    * `documents` (told whether [[docs]] returned one partition), its DuckDB
+    * twin and the keys both are sorted by.
     *
     * Operators in `graft.operators`/`graft.functions` return UNSORTED
     * DataFrames, and their SQL twins unsorted rows (no library operator
     * embeds a global sort — a full range-partition of the corpus would be a
-    * 100 TB scale-killer). Each row adds the deterministic order that the
-    * driver's row-by-row hash compare needs to its plan and to its twin
-    * alike, at the verification edge only; top-K word frequency orders and
-    * limits inside the operator, on both sides.
+    * 100 TB scale-killer). Each row's keys give the deterministic order that
+    * the driver's row-by-row hash compare needs, to its plan and to its twin
+    * (`ORDER BY`) alike, at the verification edge only; top-K word
+    * frequency has no keys: it orders and limits inside the operator, on
+    * both sides.
     *
-    * Edge rule: a per-row projection sorts its narrow INPUT, not its
-    * output. A global sort is a range-partition exchange, and range
-    * sampling runs the exchange's child once to pick the bounds and again
-    * for the shuffle. Sorting `(doc_id, text)` first leaves only the scan
-    * under the exchange; Project, Generate and Filter keep their input's
-    * order, so the clean chain runs once, after the exchange.
+    * Edge rule on several splits: a per-row projection sorts its narrow
+    * INPUT, not its output. A global sort is a range-partition exchange, and
+    * range sampling runs the exchange's child once to pick the bounds and
+    * again for the shuffle. Sorting `(doc_id, text)` first leaves only the
+    * scan under the exchange; Project, Generate and Filter keep their
+    * input's order, so the clean chain runs once, after the exchange.
     * Aggregating and filtering queries sort their (smaller) output, except
-    * term_doc_freq: its output is as wide as a per-row projection's, and it
-    * reads its input twice (tf, and df's aggregate). Sorting the input lets
-    * both branches share one range exchange of `(doc_id, text)`, which AQE
-    * reuses: one scan. tf's Generate and the broadcast probe keep the
-    * `doc_id` range partitioning, so the output needs only a local sort.
+    * term_doc_freq, which sorts both: its output is as wide as a per-row
+    * projection's, and it reads its input twice (tf, and df's aggregate).
+    * Sorting the input lets both branches share one range exchange of
+    * `(doc_id, text)`, which AQE reuses: one scan. tf's Generate and the
+    * broadcast probe keep the `doc_id` range partitioning, so the output
+    * needs only a local sort.
     *
-    * All of the above is the plan of a table that scans as several splits.
-    * On a one-split table [[docs]] returns a single partition, so every
-    * sort runs in place and no query has a range or hash exchange; only
-    * term_doc_freq's broadcast of df remains, and it scans its input once
-    * per branch. The results, and their order, are the same on both.
+    * On one split [[docs]] returns one partition, and every query sorts its
+    * output in place, not its input: a plan of one-child operators keeps
+    * that partition, so `sortWithinPartitions` is a global order, and the
+    * five queries that do not aggregate plan without AQE. term_doc_freq
+    * joins df in the task ([[TfIdfOps.termDocFreq]]); Spark would shuffle
+    * both sides of that join if one's estimated size passed
+    * `spark.sql.maxSinglePartitionBytes`, so it keeps `orderBy`, which is
+    * the same one `SortExec` while the output is one partition. No query
+    * has an exchange. The results, and their order, are the same on both.
     */
   private val table: Seq[Query] = Seq(
     // A7/T2/T3 + P1-P5,P7,F3,F4: global word frequency, chart top-20.
-    Query("word_freq_top20", TextOps.wordFreq(_, 20), TextOps.wordFreqSql(20)),
+    Query("word_freq_top20", (d, _) => TextOps.wordFreq(d, 20), TextOps.wordFreqSql(20)),
     // A7/T2: the reference's full top-200 result table (app.py:169).
-    Query("word_freq_top200", TextOps.wordFreq(_, 200), TextOps.wordFreqSql(200)),
+    Query("word_freq_top200", (d, _) => TextOps.wordFreq(d, 200), TextOps.wordFreqSql(200)),
     // P1-P5,P7,F3,F4: the clean_text projection (app.py:46-57).
-    Query("clean_text", d => CorpusOps.cleanTexts(d.orderBy("doc_id")),
-      s"${CorpusOps.cleanTextsSql} ORDER BY doc_id"),
+    Query("clean_text", (d, _) => CorpusOps.cleanTexts(d), CorpusOps.cleanTextsSql, Seq("doc_id"), SortInput),
     // P8+F2: derived word count, empty docs dropped (app.py:115,117).
-    Query("word_count", d => CorpusOps.wordCounts(d.orderBy("doc_id")),
-      s"${CorpusOps.wordCountsSql} ORDER BY doc_id"),
+    Query("word_count", (d, _) => CorpusOps.wordCounts(d), CorpusOps.wordCountsSql, Seq("doc_id"), SortInput),
     // F1+T4: keyword OR predicate + lang filter (app.py:83-89).
-    Query("keyword_filter", d => CorpusOps.keywordFilter(d).orderBy("doc_id"),
-      s"${CorpusOps.keywordFilterSql} ORDER BY doc_id"),
+    Query("keyword_filter", (d, _) => CorpusOps.keywordFilter(d), CorpusOps.keywordFilterSql,
+      Seq("doc_id")),
     // Text-quality scoring (north-star corpus filtering).
-    Query("doc_stats", d => CorpusOps.docStats(d.orderBy("doc_id")),
-      s"${CorpusOps.docStatsSql} ORDER BY doc_id"),
+    Query("doc_stats", (d, _) => CorpusOps.docStats(d), CorpusOps.docStatsSql, Seq("doc_id"), SortInput),
     // Corpus stats per language (exact bigint sums).
-    Query("lang_dist", d => CorpusOps.langDist(d).orderBy("lang"),
-      s"${CorpusOps.langDistSql} ORDER BY lang"),
+    Query("lang_dist", (d, _) => CorpusOps.langDist(d), CorpusOps.langDistSql, Seq("lang")),
     // Document fingerprinting (md5 of cleaned text).
-    Query("doc_fingerprint", d => CorpusOps.fingerprints(d.orderBy("doc_id")),
-      s"${CorpusOps.fingerprintsSql} ORDER BY doc_id"),
+    Query("doc_fingerprint", (d, _) => CorpusOps.fingerprints(d), CorpusOps.fingerprintsSql,
+      Seq("doc_id"), SortInput),
     // Exact dedup: deterministic survivor + dup count per fingerprint.
-    Query("dedup_exact", d => CorpusOps.dedupExact(d).orderBy("keep_id"),
-      s"${CorpusOps.dedupExactSql} ORDER BY keep_id"),
+    Query("dedup_exact", (d, _) => CorpusOps.dedupExact(d), CorpusOps.dedupExactSql, Seq("keep_id")),
     // A2+A3: per-doc term frequency ⋈ per-term document frequency — the
     // relational spine of TF-IDF (app.py:156-157).
-    Query("term_doc_freq", d => TfIdfOps.termDocFreq(d.orderBy("doc_id")).orderBy("doc_id", "term"),
-      s"${TfIdfOps.termDocFreqSql} ORDER BY doc_id, term")
+    Query("term_doc_freq", (d, one) => TfIdfOps.termDocFreq(d, one), TfIdfOps.termDocFreqSql,
+      Seq("doc_id", "term"), SortBoth)
   )
 
   /** Each query's plan over `documents` as [[docs]] reads it from `dir`. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    table.map(q => q.name -> ((s: SparkSession, dir: String) => q.plan(docs(s, dir)))).toMap
+    table.map(q => q.name -> ((s: SparkSession, dir: String) => {
+      val (d, one) = docs(s, dir)
+      q.sorted(d, one)
+    })).toMap
 
   /** Each query's DuckDB twin, run on the same parquet tables. */
-  def oracleSql: Map[String, String] = table.map(q => q.name -> q.sql).toMap
+  def oracleSql: Map[String, String] = table.map(q => q.name -> q.sortedSql).toMap
 }

@@ -14,14 +14,27 @@ import graft.functions.TextOps
   * term, so nothing is shuffled on `(doc_id, term)`. That is exact because
   * `doc_id` is the documents key (FIXTURES.md). df is then a partial plus
   * final hash aggregate on `term`, whose map-side combine absorbs hot
-  * terms, joined back to tf. The planner broadcasts df while it is under
-  * `spark.sql.autoBroadcastJoinThreshold`; past that it sort-merge joins,
-  * and AQE's skew-join rule can split a hot term's partitions. */
+  * terms, joined back to tf.
+  *
+  * The join. Over several partitions the planner broadcasts df while it is
+  * under `spark.sql.autoBroadcastJoinThreshold`; past that it sort-merge
+  * joins, and AQE's skew-join rule can split a hot term's partitions. Over
+  * one partition (`onePartition`: the caller read `docs` as one) tf and df
+  * are each one partition already, so a `shuffle_hash` hint on df joins
+  * them in the task, with no exchange: one job, and no collect of df to
+  * the driver, no broadcast and no broadcast blocks left for the context
+  * cleaner. A sort-merge join would also need no exchange, but it sorts
+  * both sides. The hint's build side is bounded: df holds at most one row
+  * per distinct term of one split, and Spark plans a table as one split
+  * only when it is at most `spark.sql.files.maxPartitionBytes`. The hash
+  * relation is built in task memory; one that cannot get it fails the
+  * task with Spark's out-of-memory error, not silently. */
 object TfIdfOps {
-  def termDocFreq(docs: DataFrame): DataFrame = {
+  def termDocFreq(docs: DataFrame, onePartition: Boolean = false): DataFrame = {
     val tf = docs.select(col("doc_id"), inline(TextOps.termCounts(col("text"))))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    tf.join(dfreq, "term").select("doc_id", "term", "tf", "df")
+    tf.join(if (onePartition) dfreq.hint("shuffle_hash") else dfreq, "term")
+      .select("doc_id", "term", "tf", "df")
   }
 
   val termDocFreqSql: String =

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 import java.util.Comparator
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, CaseWhen, Expression, RegExpReplace, StringSplit}
@@ -12,6 +14,7 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SortExe
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -639,8 +642,9 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("one-split plan shapes: per-query operator counts == the table, no shuffle") {
-    // final plan over docsOneFile: the one partition satisfies every sort
-    // and aggregate, so only term_doc_freq's broadcast of df is an exchange
+    // final plan over docsOneFile: the one partition satisfies every sort,
+    // aggregate and join, so no query has an exchange; each sorts only its
+    // output, and term_doc_freq joins df in the task, with no broadcast
     val expected: Map[String, Seq[Int]] = Map(
       "word_freq_top20"  -> Seq(1, 1, 0, 0, 0, 0, 0, 2),
       "word_freq_top200" -> Seq(1, 1, 0, 0, 0, 0, 0, 2),
@@ -651,7 +655,7 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       "lang_dist"        -> Seq(1, 0, 0, 0, 0, 0, 1, 2),
       "doc_fingerprint"  -> Seq(1, 0, 0, 0, 0, 0, 1, 0),
       "dedup_exact"      -> Seq(1, 0, 0, 0, 0, 0, 1, 2),
-      "term_doc_freq"    -> Seq(2, 2, 0, 0, 1, 0, 3, 2))
+      "term_doc_freq"    -> Seq(2, 2, 0, 0, 0, 0, 1, 2))
     val ops = SparkEntry.queries.map { case (name, fn) =>
       name -> executedOperators(fn(spark, docsOneFile)) }
     val actual = ops.map { case (name, o) => name -> kinds.map { case (_, isKind) => o.count(isKind) } }
@@ -664,6 +668,61 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and so does filter pushdown: keyword_filter's lang = 'en'
     val kwScan = ops("keyword_filter").collect { case s: FileSourceScanExec => s }.head
     assert(kwScan.dataFilters.exists(_.references.map(_.name).toSet == Set("lang")), kwScan.dataFilters)
+  }
+
+  test("one-split plans: the five queries with no exchange plan without AQE, the aggregating ones keep it") {
+    def adaptive(name: String): Boolean = SparkEntry.queries(name)(spark, docsOneFile)
+      .queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec]
+    for (name <- Seq("clean_text", "word_count", "keyword_filter", "doc_stats", "doc_fingerprint"))
+      assert(!adaptive(name), name)
+    for (name <- Seq("lang_dist", "dedup_exact", "word_freq_top20", "word_freq_top200", "term_doc_freq"))
+      assert(adaptive(name), name)
+  }
+
+  /** How many Spark jobs `run` starts, counted by a listener. */
+  private def jobsOf(run: => Unit): Int = {
+    val marker = "jobsOf: end marker"
+    val started = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.put(
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      run
+      // a listener sees jobs in the order they start: once the marker job
+      // arrives, so have all of run's
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      var jobs = 0
+      var next = started.poll(60, TimeUnit.SECONDS)
+      while (next != marker) {
+        assert(next != null, "no listener event for 60 s")
+        jobs += 1
+        next = started.poll(60, TimeUnit.SECONDS)
+      }
+      jobs
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("one-split term_doc_freq joins df in the task: a shuffled hash join, no broadcast, one job") {
+    val tdf = SparkEntry.queries("term_doc_freq")(spark, docsOneFile)
+    assert(jobsOf(tdf.collect()) === 1)
+    val ops = operators(tdf.queryExecution.executedPlan)
+    assert(ops.count(_.isInstanceOf[ShuffledHashJoinExec]) === 1, ops)
+    assert(!ops.exists(o => o.isInstanceOf[BroadcastExchangeExec] || o.isInstanceOf[BroadcastHashJoinExec] ||
+      o.isInstanceOf[ShuffleExchangeExec]), ops)
+  }
+
+  test("several-split term_doc_freq keeps the planner's own join choice: no hint, df broadcast") {
+    for (dir <- Seq(docsParquet, docsTwoTinyFiles)) {
+      val tdf = SparkEntry.queries("term_doc_freq")(spark, dir)
+      assert(tdf.queryExecution.analyzed.collect { case h: ResolvedHint => h }.isEmpty, dir)
+      val ops = executedOperators(tdf)
+      assert(ops.count(_.isInstanceOf[BroadcastHashJoinExec]) === 1, s"$dir: $ops")
+      assert(!ops.exists(_.isInstanceOf[ShuffledHashJoinExec]), s"$dir: $ops")
+    }
   }
 
   test("termCounts kernel sorts by bytes without UTF8String.compareTo, which throws under spark.testing") {
