@@ -67,7 +67,6 @@ object SparkEntry {
       * `one` says whether `d` is one partition. */
     def sorted(d: DataFrame, one: Boolean): DataFrame = (keys.map(col), one, edge) match {
       case (Seq(), _, _) => plan(d, one)
-      case (k, true, SortBoth) => plan(d, one).orderBy(k: _*)
       case (k, true, _) => plan(d, one).sortWithinPartitions(k: _*)
       case (k, false, SortInput) => plan(d.orderBy(k.head), one)
       case (k, false, SortOutput) => plan(d, one).orderBy(k: _*)
@@ -107,11 +106,9 @@ object SparkEntry {
     * output in place, not its input: a plan of one-child operators keeps
     * that partition, so `sortWithinPartitions` is a global order, and the
     * five queries that do not aggregate plan without AQE. term_doc_freq
-    * joins df in the task ([[TfIdfOps.termDocFreq]]); Spark would shuffle
-    * both sides of that join if one's estimated size passed
-    * `spark.sql.maxSinglePartitionBytes`, so it keeps `orderBy`, which is
-    * the same one `SortExec` while the output is one partition. No query
-    * has an exchange. The results, and their order, are the same on both.
+    * counts df over a window in the task ([[TfIdfOps.termDocFreq]]). No
+    * query has an exchange. The results, and their order, are the same on
+    * both.
     */
   private val table: Seq[Query] = Seq(
     // A7/T2/T3 + P1-P5,P7,F3,F4: global word frequency, chart top-20.

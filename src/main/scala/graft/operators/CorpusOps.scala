@@ -35,11 +35,8 @@ object CorpusOps {
   /** F1: ≤8-keyword OR predicate + language equality, mirroring the
     * reference's `(kw1 OR …) lang:en` server-side query (app.py:83-89).
     * The OR of the 8 `lower(text).contains(k)` is one byte kernel,
-    * [[keywordHit]], which lowers as it compares; the 8 branches lowered
-    * `text` once each. With the clean chain's kernels also moved onto raw
-    * text, a traced `per_doc` run (seed 7, 4 cores) timed this operator at
-    * 0.161 s against 0.218 s with the branches, and `per_doc`'s
-    * `report_cpu_s_p50` fell 22.2 % (lower in 10 of 10 pairs). */
+    * [[keywordHit]], which lowers as it compares, where 8 branches would
+    * lower `text` once each. */
   def keywordFilter(docs: DataFrame): DataFrame =
     docs.filter(col("lang") === "en" && keywordHit(col("text")))
       .select(col("doc_id"), col("lang"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextOps
 
@@ -12,28 +13,23 @@ import graft.functions.TextOps
   * each tweet is one row of sklearn's term matrix (app.py:156-166): the
   * [[TextOps.termCounts]] kernel emits one `(term, tf)` row per distinct
   * term, so nothing is shuffled on `(doc_id, term)`. That is exact because
-  * `doc_id` is the documents key (FIXTURES.md). df is then a partial plus
-  * final hash aggregate on `term`, whose map-side combine absorbs hot
-  * terms, joined back to tf.
+  * `doc_id` is the documents key (FIXTURES.md).
   *
-  * The join. Over several partitions the planner broadcasts df while it is
-  * under `spark.sql.autoBroadcastJoinThreshold`; past that it sort-merge
-  * joins, and AQE's skew-join rule can split a hot term's partitions. Over
-  * one partition (`onePartition`: the caller read `docs` as one) tf and df
-  * are each one partition already, so a `shuffle_hash` hint on df joins
-  * them in the task, with no exchange: one job, and no collect of df to
-  * the driver, no broadcast and no broadcast blocks left for the context
-  * cleaner. A sort-merge join would also need no exchange, but it sorts
-  * both sides. The hint's build side is bounded: df holds at most one row
-  * per distinct term of one split, and Spark plans a table as one split
-  * only when it is at most `spark.sql.files.maxPartitionBytes`. The hash
-  * relation is built in task memory; one that cannot get it fails the
-  * task with Spark's out-of-memory error, not silently. */
+  * df has two plans. Over several partitions it is a partial plus final
+  * hash aggregate on `term`, whose map-side combine absorbs hot terms,
+  * joined back to tf: the planner broadcasts df while it is under
+  * `spark.sql.autoBroadcastJoinThreshold`; past that it sort-merge joins,
+  * and AQE's skew-join rule can split a hot term's partitions. Over one
+  * partition (`onePartition`: the caller read `docs` as one) the table is
+  * one task already, so df is a count over a window on `term`: tf is read
+  * once, sorted by term and counted in place, with no aggregate, no join
+  * and one job. The window holds one term's rows at a time, in a buffer
+  * that spills to disk, so a hot term need not fit in task memory. */
 object TfIdfOps {
   def termDocFreq(docs: DataFrame, onePartition: Boolean = false): DataFrame = {
     val tf = docs.select(col("doc_id"), inline(TextOps.termCounts(col("text"))))
-    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    tf.join(if (onePartition) dfreq.hint("shuffle_hash") else dfreq, "term")
+    if (onePartition) tf.withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
+    else tf.join(tf.groupBy("term").agg(count(lit(1)).as("df")), "term")
       .select("doc_id", "term", "tf", "df")
   }
 

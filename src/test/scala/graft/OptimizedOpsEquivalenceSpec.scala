@@ -13,8 +13,8 @@ import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePart
 import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
-import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, ShuffledHashJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -163,6 +163,10 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Whether any operator of `ops` has an expression with a node matching `p`. */
   private def anyExpression(ops: Seq[SparkPlan])(p: Expression => Boolean): Boolean =
     ops.flatMap(_.expressions).exists(_.exists(p))
+
+  /** How many calls to the byte kernel `kernel` the expressions of `ops` make. */
+  private def calls(ops: Seq[SparkPlan], kernel: String): Int = ops.flatMap(_.expressions)
+    .map(_.collect { case s: StaticInvoke if s.functionName == kernel => s }.size).sum
 
   /** The reference's clean chain, one step per built-in: the three regex
     * passes of the oracle's normalizeSqlExpr, then split and keepToken. */
@@ -541,8 +545,6 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ops = executedOperators(SparkEntry.queries("doc_stats")(spark, docsParquet))
     assert(!anyExpression(ops)(e => e.isInstanceOf[ArrayFilter] ||
       e.isInstanceOf[StringSplit] || e.isInstanceOf[RegExpReplace]))
-    def calls(ops: Seq[SparkPlan], kernel: String): Int = ops.flatMap(_.expressions)
-      .map(_.collect { case s: StaticInvoke if s.functionName == kernel => s }.size).sum
     // CollapseProject must not inline the struct once per field
     assert(calls(ops, "statsLowered") === 1)
     // word_count's Generate barrier: its Filter does not call the kernel again
@@ -643,8 +645,8 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("one-split plan shapes: per-query operator counts == the table, no shuffle") {
     // final plan over docsOneFile: the one partition satisfies every sort,
-    // aggregate and join, so no query has an exchange; each sorts only its
-    // output, and term_doc_freq joins df in the task, with no broadcast
+    // aggregate and window, so no query has an exchange; each sorts only its
+    // output, and term_doc_freq counts df over a window in the task
     val expected: Map[String, Seq[Int]] = Map(
       "word_freq_top20"  -> Seq(1, 1, 0, 0, 0, 0, 0, 2),
       "word_freq_top200" -> Seq(1, 1, 0, 0, 0, 0, 0, 2),
@@ -655,7 +657,7 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       "lang_dist"        -> Seq(1, 0, 0, 0, 0, 0, 1, 2),
       "doc_fingerprint"  -> Seq(1, 0, 0, 0, 0, 0, 1, 0),
       "dedup_exact"      -> Seq(1, 0, 0, 0, 0, 0, 1, 2),
-      "term_doc_freq"    -> Seq(2, 2, 0, 0, 0, 0, 1, 2))
+      "term_doc_freq"    -> Seq(1, 1, 0, 0, 0, 1, 2, 0))
     val ops = SparkEntry.queries.map { case (name, fn) =>
       name -> executedOperators(fn(spark, docsOneFile)) }
     val actual = ops.map { case (name, o) => name -> kinds.map { case (_, isKind) => o.count(isKind) } }
@@ -706,13 +708,31 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("one-split term_doc_freq joins df in the task: a shuffled hash join, no broadcast, one job") {
+  test("one-split term_doc_freq counts df with a window in the task: one scan, no join, one job") {
     val tdf = SparkEntry.queries("term_doc_freq")(spark, docsOneFile)
     assert(jobsOf(tdf.collect()) === 1)
     val ops = operators(tdf.queryExecution.executedPlan)
-    assert(ops.count(_.isInstanceOf[ShuffledHashJoinExec]) === 1, ops)
-    assert(!ops.exists(o => o.isInstanceOf[BroadcastExchangeExec] || o.isInstanceOf[BroadcastHashJoinExec] ||
-      o.isInstanceOf[ShuffleExchangeExec]), ops)
+    assert(ops.count(_.isInstanceOf[FileSourceScanExec]) === 1, ops)
+    assert(calls(ops, "termCountsRaw") === 1, ops)
+    val windows = ops.collect { case w: WindowExec => w }
+    assert(windows.map(_.partitionSpec.flatMap(_.references.map(_.name))) === Seq(Seq("term")), ops)
+    assert(!ops.exists(o => o.isInstanceOf[BaseJoinExec] || o.isInstanceOf[Exchange]), ops)
+  }
+
+  test("one-split term_doc_freq spills its window buffer: the same rows in the same order") {
+    val inMemory = SparkEntry.queries("term_doc_freq")(spark, docsOneFile).collect().toSeq
+    spark.conf.set("spark.sql.windowExec.buffer.in.memory.threshold", "1")
+    spark.conf.set("spark.sql.windowExec.buffer.spill.threshold", "1")
+    try {
+      val tdf = SparkEntry.queries("term_doc_freq")(spark, docsOneFile)
+      assert(tdf.collect().toSeq === inMemory)
+      val spilled = operators(tdf.queryExecution.executedPlan)
+        .collect { case w: WindowExec => w.metrics("spillSize").value }
+      assert(spilled.size === 1 && spilled.head > 0, spilled)
+    } finally {
+      spark.conf.unset("spark.sql.windowExec.buffer.in.memory.threshold")
+      spark.conf.unset("spark.sql.windowExec.buffer.spill.threshold")
+    }
   }
 
   test("several-split term_doc_freq keeps the planner's own join choice: no hint, df broadcast") {
