@@ -22,12 +22,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * `text`. The per-row text work is byte kernels, each one `StaticInvoke`
   * (see [[kernel]]): [[cleanRaw]] (the clean chain) and [[termCountsRaw]]
   * (term_doc_freq's per-document tf, built on [[cleanRaw]]) read raw `text`
-  * and lower it as they scan, and so does keyword_filter's
-  * `CorpusOps.keywordHitRaw`, through [[lowerStartsWith]]. Lowering raw
-  * bytes is exact for them because only two non-ASCII code points lower to
-  * anything ASCII (see [[isKelvin]]). [[statsLowered]] (doc_stats' counts)
-  * reads Spark's own `lower(text)`: its distinct counts and token lengths
-  * depend on the case mapping of every letter, not only of the ASCII ones.
+  * through one copy lowered in its ASCII bytes, [[lowerRaw]], and so does
+  * keyword_filter's `CorpusOps.keywordHitRaw`. That copy is exact for them
+  * because only two non-ASCII code points lower to anything ASCII (see
+  * [[lowerRaw]]). [[statsLowered]] (doc_stats' counts) reads Spark's own
+  * `lower(text)`: its distinct counts and token lengths depend on the case
+  * mapping of every letter, not only of the ASCII ones.
   * Everything else is composed from `org.apache.spark.sql.functions`
   * built-ins. The reference's lemmatizer (app.py:54) is not built.
   */
@@ -143,9 +143,9 @@ object TextOps {
 
   /** The byte kernel `name` of object `obj` over `arg`, as one codegen'd
     * `StaticInvoke`: no UDF, no Java-string round trip. A kernel named
-    * `…Raw` takes raw text and lowers the bytes it looks at itself, which
-    * saves Spark's `lower` a pass over the text and a copy of it; one named
-    * `…Lowered` takes `lower(text)`. */
+    * `…Raw` takes raw text and reads it through [[lowerRaw]], which lowers
+    * only what ASCII logic can see, in one pass with no Java string; one
+    * named `…Lowered` takes `lower(text)`. */
   private[graft] def kernel(obj: AnyRef, name: String, dataType: DataType, arg: Column): Column =
     ExpressionBridge.column(StaticInvoke(obj.getClass, dataType, name,
       Seq(ExpressionBridge.expression(arg)), returnNullable = false))
@@ -159,41 +159,48 @@ object TextOps {
   private def isWord(b: Byte): Boolean = // ASCII \w, as in Java and RE2
     (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9') || b == '_'
 
-  private def lowerAscii(b: Byte): Byte = if (b >= 'A' && b <= 'Z') (b | 0x20).toByte else b
-
-  /** Whether the character at `in(i)` is the Kelvin sign U+212A (UTF-8
-    * `E2 84 AA`), which lowers to ASCII `k`.
+  /** The lowercase of raw UTF-8 text in every ASCII byte: `A`-`Z` lowered,
+    * the Kelvin sign U+212A (`E2 84 AA`) to `k`, `İ` U+0130 (`C4 B0`) to `i`
+    * plus U+0307 (`i CC 87`), and every other byte as it is.
     *
-    * It and `İ` ([[isCapitalDottedI]]) are the only code points of U+0080
-    * and up whose lowercase holds an ASCII character, with ICU case mapping
-    * on or off (a test lowers every one of them). Every other one lowers to
-    * non-ASCII code points only, which are never whitespace, `[a-z]` or
-    * `\w`. So a kernel reads the lowered text of raw UTF-8 bytes exactly by
-    * lowering `A`-`Z`, mapping these two characters, and taking every other
-    * byte as it is: no ASCII byte occurs inside a multi-byte sequence. */
-  private def isKelvin(in: Array[Byte], i: Int): Boolean =
-    i + 2 < in.length && in(i) == 0xE2.toByte && in(i + 1) == 0x84.toByte && in(i + 2) == 0xAA.toByte
-
-  /** Whether the character at `in(i)` is `İ` U+0130 (UTF-8 `C4 B0`), which
-    * lowers to `i` followed by U+0307, a combining dot that is neither a
-    * letter nor `\w`: a `\w` run or a keyword can end at that `i`, not go
-    * on past it. */
-  private def isCapitalDottedI(in: Array[Byte], i: Int): Boolean =
-    i + 1 < in.length && in(i) == 0xC4.toByte && in(i + 1) == 0xB0.toByte
-
-  /** Whether the lowered text of the raw UTF-8 bytes `in`, at the character
-    * that starts at `in(p)`, starts with `word`, which is lowercase ASCII. */
-  private[graft] def lowerStartsWith(in: Array[Byte], p: Int, word: Array[Byte]): Boolean = {
-    var q = p
-    var j = 0
-    var matched = true
-    while (matched && j < word.length) {
-      if (q < in.length && lowerAscii(in(q)) == word(j)) q += 1
-      else if (word(j) == 'k' && isKelvin(in, q)) q += 3
-      else matched = j == word.length - 1 && word(j) == 'i' && isCapitalDottedI(in, q)
-      j += 1
+    * These two are the only code points of U+0080 and up whose lowercase
+    * holds an ASCII character, with ICU case mapping on or off (a test
+    * lowers every one of them). Every other one lowers to non-ASCII code
+    * points only, which are never whitespace, `[a-z]` or `\w`, and no ASCII
+    * byte occurs inside a multi-byte sequence. So ASCII-only logic reads
+    * this array exactly as it would read Spark's `lower(text)`.
+    */
+  private[graft] def lowerRaw(text: UTF8String): Array[Byte] = {
+    val in = text.getBytes
+    val n = in.length
+    // A fresh array, never `in`: getBytes can return the string's own
+    // buffer, and cleanRaw writes into the result.
+    var out = new Array[Byte](n)
+    var i = 0
+    var o = 0
+    while (i < n) {
+      val b = in(i)
+      if (b == 0xE2.toByte && i + 2 < n && in(i + 1) == 0x84.toByte && in(i + 2) == 0xAA.toByte) {
+        out(o) = 'k'
+        i += 3
+        o += 1
+      } else if (b == 0xC4.toByte && i + 1 < n && in(i + 1) == 0xB0.toByte) {
+        // Grow at most once, at the first İ: each 2-byte İ lowers to 3
+        // bytes, so the result never needs more than n + n/2. Growing by one
+        // per İ would copy the array once per İ, quadratic in their number.
+        if (out.length == n) out = java.util.Arrays.copyOf(out, n + n / 2 + 1)
+        out(o) = 'i'
+        out(o + 1) = 0xCC.toByte
+        out(o + 2) = 0x87.toByte
+        i += 2
+        o += 3
+      } else {
+        out(o) = if (b >= 'A' && b <= 'Z') (b | 0x20).toByte else b
+        i += 1
+        o += 1
+      }
     }
-    matched
+    if (o == out.length) out else java.util.Arrays.copyOf(out, o)
   }
 
   /** End of the token at `from`: its first whitespace index, or `in.length`. */
@@ -203,46 +210,33 @@ object TextOps {
     i
   }
 
-  /** Start of the first [[UrlRe]] match in the lowered token of raw bytes
-    * `in(from until end)`, or `end`: `http` or `www` in either case and one
-    * more byte (`https` implies `http`). No non-ASCII character lowers to
-    * any of these letters. */
+  /** Start of the first [[UrlRe]] match in the lowered token
+    * `in(from until end)`, or `end`: `http` or `www` and one more byte
+    * (`https` implies `http`). */
   private def urlStart(in: Array[Byte], from: Int, end: Int): Int = {
     var p = from
     while (p < end && !(
-        p + 4 < end && lowerAscii(in(p)) == 'h' && lowerAscii(in(p + 1)) == 't' &&
-          lowerAscii(in(p + 2)) == 't' && lowerAscii(in(p + 3)) == 'p' ||
-        p + 3 < end && lowerAscii(in(p)) == 'w' && lowerAscii(in(p + 1)) == 'w' &&
-          lowerAscii(in(p + 2)) == 'w')) p += 1
+        p + 4 < end && in(p) == 'h' && in(p + 1) == 't' && in(p + 2) == 't' && in(p + 3) == 'p' ||
+        p + 3 < end && in(p) == 'w' && in(p + 1) == 'w' && in(p + 2) == 'w')) p += 1
     p
   }
 
-  /** End of the `\w` run at `from` in the lowered text of raw bytes
-    * `in(from until cut)`: a lowered `İ` ends it after its `i`. */
-  private def wordRunEnd(in: Array[Byte], from: Int, cut: Int): Int = {
-    var r = from
-    while (r < cut && (isWord(in(r)) || isKelvin(in, r))) r += (if (in(r) < 0) 3 else 1)
-    if (r < cut && isCapitalDottedI(in, r)) r + 2 else r
-  }
-
-  /** The clean chain on the UTF-8 bytes of raw text, lowered as it scans.
-    * The result is exactly `filter(split(p, WsRe), keepToken)`, where `p` is
-    * the text after the lowercase and the three regex passes of
-    * [[normalize]].
+  /** The clean chain on raw text, read through [[lowerRaw]]. The result is
+    * exactly `filter(split(p, WsRe), keepToken)`, where `p` is the text
+    * after the lowercase and the three regex passes of [[normalize]].
     *
     * No pass deletes whitespace and a [[UrlRe]] match runs to the end of its
     * token, so each whitespace token cleans on its own: cut it at its first
     * URL, then skip each [[MentionRe]] match before the cut (`@abhttp://x`
-    * cleans to "", not "x"), keep its letters lowered to `[a-z]`, and keep
-    * the result if it is longer than 2 and not a stopword. Bytes are exact
-    * here: every pattern literal and class member is ASCII, and so is every
-    * byte the lowering changes (see [[isKelvin]]).
+    * cleans to "", not "x"), keep its `[a-z]` letters, and keep the result
+    * if it is longer than 2 and not a stopword. Bytes are exact here: every
+    * pattern literal and class member is ASCII.
     */
   def cleanRaw(text: UTF8String): GenericArrayData = {
-    val in = text.getBytes
-    // buf(start until w) holds the current token's letters; a kept token is
-    // a view of them (fromBytes does not copy), so the next one starts after.
-    val buf = new Array[Byte](in.length)
+    val in = lowerRaw(text)
+    // in(start until w) holds the current token's letters, written behind
+    // the scan (w <= r); a kept token is a view of them (fromBytes does not
+    // copy), so the next one starts after.
     val out = ArrayBuffer.empty[Any]
     var start = 0
     var from = 0
@@ -252,24 +246,16 @@ object TextOps {
       var w = start
       var r = from
       while (r < cut) {
-        val b = lowerAscii(in(r))
-        if (b == '@') r = wordRunEnd(in, r + 1, cut) // a MentionRe match, or a lone '@'
+        val b = in(r)
+        r += 1
+        if (b == '@') while (r < cut && isWord(in(r))) r += 1 // a MentionRe match, or a lone '@'
         else if (b >= 'a' && b <= 'z') {
-          buf(w) = b
+          in(w) = b
           w += 1
-          r += 1
-        } else if (isKelvin(in, r)) {
-          buf(w) = 'k'
-          w += 1
-          r += 3
-        } else if (isCapitalDottedI(in, r)) { // its U+0307 is dropped
-          buf(w) = 'i'
-          w += 1
-          r += 2
-        } else r += 1
+        }
       }
       if (w - start > 2) {
-        val token = UTF8String.fromBytes(buf, start, w - start)
+        val token = UTF8String.fromBytes(in, start, w - start)
         if (!Stopwords.contains(token)) {
           out += token
           start = w

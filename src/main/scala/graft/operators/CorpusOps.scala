@@ -1,6 +1,5 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BooleanType
@@ -35,8 +34,8 @@ object CorpusOps {
   /** F1: ≤8-keyword OR predicate + language equality, mirroring the
     * reference's `(kw1 OR …) lang:en` server-side query (app.py:83-89).
     * The OR of the 8 `lower(text).contains(k)` is one byte kernel,
-    * [[keywordHit]], which lowers as it compares, where 8 branches would
-    * lower `text` once each. */
+    * [[keywordHit]], which lowers `text` once, where 8 branches would lower
+    * it once each. */
   def keywordFilter(docs: DataFrame): DataFrame =
     docs.filter(col("lang") === "en" && keywordHit(col("text")))
       .select(col("doc_id"), col("lang"))
@@ -45,24 +44,13 @@ object CorpusOps {
     * raw `c`. NULL in, NULL out. */
   def keywordHit(c: Column): Column = TextOps.kernel(this, "keywordHitRaw", BooleanType, c)
 
-  private val KeywordBytes: Array[Array[Byte]] =
-    Keywords.map(_.getBytes(StandardCharsets.UTF_8)).toArray
+  private val KeywordStrings: Array[UTF8String] = Keywords.map(UTF8String.fromString).toArray
 
-  /** [[keywordHit]]'s kernel: a keyword at any character of raw `text`,
-    * lowered as it compares. */
+  /** [[keywordHit]]'s kernel: a keyword in `TextOps.lowerRaw(text)`, which
+    * holds every ASCII byte of `lower(text)`, and every keyword is ASCII. */
   def keywordHitRaw(text: UTF8String): Boolean = {
-    val in = text.getBytes
-    var hit = false
-    var p = 0
-    while (!hit && p < in.length) {
-      var k = 0
-      while (!hit && k < KeywordBytes.length) {
-        hit = TextOps.lowerStartsWith(in, p, KeywordBytes(k))
-        k += 1
-      }
-      p += 1
-    }
-    hit
+    val lowered = UTF8String.fromBytes(TextOps.lowerRaw(text))
+    KeywordStrings.exists(lowered.contains)
   }
 
   val keywordFilterSql: String = {

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 import java.util.Comparator
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
@@ -96,7 +97,10 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       // keyword_filter: the Kelvin sign lowers to k, so this holds "spark";
       // İ lowers to i plus a combining dot, so this holds no "window"
       (27L, "SPAR\u212A", "en"),
-      (28L, "W\u0130NDOW", "en")
+      (28L, "W\u0130NDOW", "en"),
+      // each İ lowers to three bytes: the lowered copy must grow once, not
+      // once per İ
+      (29L, "\u0130" * 200000 + " Spark", "en")
     )
     spark.createDataFrame(rows).toDF("doc_id", "text", "lang")
       .withColumn("n_chars", length(col("text")))
@@ -359,19 +363,47 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("only U+0130 and U+212A lower to anything ASCII, with ICU case mapping on and off") {
-    // the raw-text kernels lower A-Z and these two, and take every other byte as it is
+    // so lowerRaw, which lowers A-Z and these two and takes every other byte
+    // as it is, holds every ASCII byte of Spark's lower: equal once each run
+    // of non-ASCII bytes is one marker, on every code point, the edge rows
+    // and the generated strings
     val codePoints = (0x80 to 0x10FFFF).filterNot(c => c >= 0xD800 && c <= 0xDFFF)
-    val text = spark.createDataFrame(Seq(Tuple1(codePoints.map(Character.toString).mkString(" "))))
-      .toDF("text")
+    val texts = codePoints.map(Character.toString).mkString(" ") +:
+      (docs.collect().flatMap(r => Option(r.getString(1))).toSeq ++ generatedTexts)
+    val text = spark.createDataFrame(texts.map(Tuple1(_))).toDF("text")
+    def marked(utf8: Array[Byte]): String =
+      new String(utf8, StandardCharsets.ISO_8859_1).replaceAll("[\\x80-\\xFF]+", "\u0080")
     for (icu <- Seq("true", "false")) {
       spark.conf.set("spark.sql.icu.caseMappings.enabled", icu)
       try {
-        val lowered = text.select(lower(col("text"))).head().getString(0).split(" ", -1).toSeq
+        val loweredTexts = text.select(lower(col("text"))).collect().map(_.getString(0)).toSeq
+        val lowered = loweredTexts.head.split(" ", -1).toSeq
         assert(lowered.size === codePoints.size, icu)
         val ascii = codePoints.zip(lowered).collect { case (c, l) if l.exists(_ < '\u0080') => c }
         assert(ascii === Seq(0x130, 0x212A), icu)
+        val mismatches = texts.zip(loweredTexts).filter { case (t, l) =>
+          marked(TextOps.lowerRaw(UTF8String.fromString(t))) != marked(l.getBytes(StandardCharsets.UTF_8))
+        }
+        assert(mismatches.isEmpty, s"$icu: " + mismatches.take(5).map(m => escaped(m._1.take(200))).mkString("\n"))
       } finally spark.conf.unset("spark.sql.icu.caseMappings.enabled")
     }
+  }
+
+  test("200,000 İ then \" Spark\": the kernels lower it with one growth") {
+    // the docs-based tests also compare this row's kernels with three-pass
+    // cleanTokens and lower+contains
+    val text = docs.where(col("doc_id") === 29L).select(col("text"), lower(col("text"))).head()
+    val raw = UTF8String.fromString(text.getString(0))
+    val t0 = System.nanoTime()
+    val lowered = TextOps.lowerRaw(raw)
+    val cleaned = TextOps.cleanRaw(raw)
+    val hit = CorpusOps.keywordHitRaw(raw)
+    val seconds = (System.nanoTime() - t0) / 1e9
+    assert(lowered.sameElements(text.getString(1).getBytes(StandardCharsets.UTF_8)))
+    assert(cleaned.array.toSeq.map(_.toString) === Seq("i" * 200000, "spark"))
+    assert(hit)
+    // growing once copies the array once; growing per İ copies about 100 GB
+    assert(seconds < 5, s"$seconds s")
   }
 
   test("keywordHit kernel == OR of lower(text).contains on the edge rows and 5,000 seeded strings") {
