@@ -5,16 +5,16 @@ import java.nio.file.{Files, Path}
 import java.util.Comparator
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, CaseWhen, Expression, RegExpReplace, StringSplit}
+import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, CaseWhen, Expression, Lower, RegExpReplace, StringSplit}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
 import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, ShuffledHashJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
@@ -35,6 +35,12 @@ import graft.operators.{CorpusOps, TfIdfOps}
   * URLs/mentions (also glued together), uppercase, non-ASCII letters, emoji,
   * \u000B/NBSP, empty and NULL strings, duplicate texts — and the plan
   * shapes the restructurings rely on are pinned.
+  *
+  * Each byte kernel has one reference, and one [[judge]] compares the two
+  * over the edge rows plus seeded strings, with codegen on and off. One
+  * table ("plan shapes") gives each query's operator counts and kernel calls
+  * on both layouts, several splits and one; the other plan tests pin what a
+  * count cannot show.
   */
 class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -158,9 +164,11 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     operators(df.queryExecution.executedPlan)
   }
 
+  /** The byte kernels, in the order of their columns in the plan table. */
+  private val Kernels = Seq("cleanRaw", "statsLowered", "termCountsRaw", "keywordHitRaw")
+
   private def isKernel(e: Expression): Boolean = e match {
-    case s: StaticInvoke =>
-      Set("cleanRaw", "statsLowered", "termCountsRaw").contains(s.functionName)
+    case s: StaticInvoke => Kernels.contains(s.functionName)
     case _ => false
   }
 
@@ -168,8 +176,11 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def anyExpression(ops: Seq[SparkPlan])(p: Expression => Boolean): Boolean =
     ops.flatMap(_.expressions).exists(_.exists(p))
 
-  /** How many calls to the byte kernel `kernel` the expressions of `ops` make. */
-  private def calls(ops: Seq[SparkPlan], kernel: String): Int = ops.flatMap(_.expressions)
+  /** How many calls to the byte kernel `kernel` the operators `ops` make. A
+    * scan is left out: its `dataFilters` can list a pushed-down kernel
+    * predicate, which the scan does not evaluate. */
+  private def calls(ops: Seq[SparkPlan], kernel: String): Int = ops
+    .filterNot(_.isInstanceOf[FileSourceScanExec]).flatMap(_.expressions)
     .map(_.collect { case s: StaticInvoke if s.functionName == kernel => s }.size).sum
 
   /** The reference's clean chain, one step per built-in: the three regex
@@ -216,13 +227,10 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     Gen.listOfN(5000, text).pureApply(Gen.Parameters.default, Seed(20261017L))
   }
 
-  /** [[generatedTexts]] as (doc_id, text), doc_id the index. */
-  private def generated: DataFrame =
-    spark.createDataFrame(generatedTexts.zipWithIndex.map { case (t, i) => (i.toLong, t) })
-      .toDF("doc_id", "text")
-
-  /** `s` with every char as a unicode escape, for failure messages. */
-  private def escaped(s: String): String = s.map(c => f"\\u${c.toInt}%04x").mkString
+  /** The first 200 chars of `s`, each as a unicode escape, for failure
+    * messages. */
+  private def escaped(s: String): String =
+    if (s == null) "NULL" else s.take(200).map(c => f"\\u${c.toInt}%04x").mkString
 
   /** Runs `f` on the interpreted path: no expression codegen, no
     * whole-stage codegen. */
@@ -244,48 +252,52 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(collectSorted(optimized) === collectSorted(reference))
   }
 
-  test("cleanTokens single-filter == tokenize-then-filter two-pass formulation") {
-    val twoPass = docs.select(col("doc_id"),
-      filter(TextOps.tokenize(TextOps.normalize(col("text"))),
-        (t: Column) => TextOps.keepToken(t)).as("toks"))
-    val onePass = docs.select(col("doc_id"),
-      TextOps.cleanTokens(col("text")).as("toks"))
-    assertSameResult(onePass, twoPass)
-    // boundary-whitespace doc must not contain empty tokens
-    val toks = onePass.where(col("doc_id") === 1L)
-      .select(explode(col("toks"))).collect().map(_.getString(0))
-    assert(toks.nonEmpty && toks.forall(_.nonEmpty))
-  }
+  /** The doc_id of a [[judge]]'s first seeded string; the i-th is this + i. */
+  private val SeededIds = 1000L
 
-  test("cleanTokens kernel == three-pass UrlRe on the https rows") {
-    // UrlRe keeps the reference's https branch; the kernel's URL pass has
-    // only http and www, since https can match only where http already does
-    val https = docs.where(col("doc_id").between(12L, 14L))
-    assertSameResult(
-      https.select(col("doc_id"), TextOps.cleanTokens(col("text")).as("t")),
-      https.select(col("doc_id"), threePassTokens(col("text")).as("t")))
-    // and the https rows really exercise URL stripping
-    val t12 = https.where(col("doc_id") === 12L)
-      .select(TextOps.cleanTokens(col("text"))).head().getSeq[String](0)
-    assert(t12 === Seq("secure", "gets", "stripped"))
+  /** The one judge of a byte kernel. `kernel` and `reference` each map a
+    * (doc_id, text) frame to rows that start with doc_id. Over the edge rows
+    * plus `seeded`, both must give the same columns and, for each doc_id, the
+    * same rows, with codegen on and off; a failure names the first 5
+    * documents that differ, text escaped. Returns the reference's rows by
+    * doc_id. */
+  private def judge(seeded: Seq[String])(kernel: DataFrame => DataFrame,
+      reference: DataFrame => DataFrame): Map[Long, Seq[Row]] = {
+    val corpus = docs.select("doc_id", "text").union(spark.createDataFrame(
+      seeded.zipWithIndex.map { case (t, i) => (SeededIds + i, t) }).toDF("doc_id", "text"))
+    val text = corpus.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    def byDoc(df: DataFrame): Map[Long, Seq[Row]] = df.collect().toSeq.groupBy(_.getLong(0))
+      .map { case (id, rows) => id -> rows.sortBy(_.toString) }
+    val ref = reference(corpus)
+    val expected = byDoc(ref)
+    def check(codegen: String): Unit = {
+      val built = kernel(corpus)
+      assert(built.schema.map(f => (f.name, f.dataType)) === ref.schema.map(f => (f.name, f.dataType)))
+      val actual = byDoc(built)
+      val differ = text.keys.toSeq.sorted.filter(id => actual.get(id) != expected.get(id))
+      assert(differ.isEmpty, s"codegen $codegen:\n" + differ.take(5).map(id =>
+        s"$id ${escaped(text(id))}: kernel ${actual.get(id)} != reference ${expected.get(id)}")
+        .mkString("\n"))
+    }
+    check("on")
+    withoutCodegen(check("off")) // the interpreted path must call the same kernel
+    expected
   }
 
   test("cleanTokens kernel == sequential three-pass regex, split and keepToken") {
-    assertSameResult(
-      docs.select(col("doc_id"), TextOps.cleanTokens(col("text")).as("t")),
-      docs.select(col("doc_id"), threePassTokens(col("text")).as("t")))
-    assertSameResult(
-      docs.select(col("doc_id"), TextOps.normalize(col("text")).as("t")),
-      docs.select(col("doc_id"), regexp_replace(regexp_replace(regexp_replace(
-        lower(col("text")), TextOps.UrlRe, ""), TextOps.MentionRe, ""),
-        TextOps.NonAlphaRe, "").as("t")))
+    val tokens = judge(generatedTexts)(
+      _.select(col("doc_id"), TextOps.cleanTokens(col("text")).as("t")),
+      _.select(col("doc_id"), threePassTokens(col("text")).as("t")))
+    // the seeded strings reach the kernel's branches: URLs, mentions, kept tokens
+    assert(generatedTexts.count(_.toLowerCase.contains("http")) > 500)
+    assert(tokens.count { case (id, Seq(r)) => id >= SeededIds && r.getSeq[String](1).nonEmpty } > 500)
     val cleaned = docs.select(col("doc_id"), TextOps.cleanText(col("text")))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    // the interpreted path (no codegen) finds and calls the same kernel
-    withoutCodegen {
-      assert(docs.select(col("doc_id"), TextOps.cleanText(col("text")))
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap === cleaned)
-    }
+    // boundary whitespace leaves no empty token
+    assert(cleaned(1L) === "leading trailing whitespace tokens survive cleaning")
+    // UrlRe keeps the reference's https branch; the kernel's URL pass has
+    // only http and www, since https can match only where http already does
+    assert(cleaned(12L) === "secure gets stripped")
     assert(cleaned(15L) === null)
     assert(cleaned(16L) === "glued")
     assert(cleaned(17L) === "survives lowercase first")
@@ -300,66 +312,27 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cleaned(26L) === "word")
   }
 
-  test("cleanTokens kernel == three-pass formulation on 5,000 seeded generated strings") {
-    val rows = generated.select(col("text"), TextOps.cleanTokens(col("text")),
-      threePassTokens(col("text"))).collect()
-    val mismatches = rows.filter(r => r.getSeq[String](1) != r.getSeq[String](2))
-    assert(mismatches.isEmpty,
-      mismatches.take(5).map(r => s"${escaped(r.getString(0))}: " +
-        s"kernel ${r.getSeq[String](1)} != three-pass ${r.getSeq[String](2)}").mkString("\n"))
-    // the corpus reaches the kernel's branches: URLs, mentions, kept tokens
-    assert(generatedTexts.count(_.toLowerCase.contains("http")) > 500)
-    assert(rows.count(_.getSeq[String](1).nonEmpty) > 500)
-  }
-
   test("docStats kernel == plain formulation on 5,000 seeded strings") {
-    val plain = plainDocStats(generated).collect().map(r => r.getLong(0) -> r).toMap
-    def check(): Unit = {
-      val stats = CorpusOps.docStats(generated)
-      assert(stats.schema.map(f => (f.name, f.dataType)) ===
-        plainDocStats(generated).schema.map(f => (f.name, f.dataType)))
-      val kernel = stats.collect().map(r => r.getLong(0) -> r).toMap
-      val mismatches = plain.keys.toSeq.sorted.filter(id => kernel(id) != plain(id))
-      assert(mismatches.isEmpty, mismatches.take(5).map(id =>
-        s"${escaped(generatedTexts(id.toInt))}: kernel ${kernel(id)} != plain ${plain(id)}")
-        .mkString("\n"))
-    }
-    check()
-    withoutCodegen(check()) // the interpreted path calls the same kernel
-    // the corpus reaches stopwords, repeated tokens and multi-byte chars
-    val rows = plain.values.toSeq
-    assert(rows.count(_.getAs[Double]("stop_ratio") > 0) > 500)
-    assert(rows.count(r => r.getAs[Int]("n_distinct") < r.getAs[Int]("n_tokens")) > 20)
+    val stats = judge(generatedTexts)(CorpusOps.docStats, plainDocStats)
+    // the seeded strings reach stopwords, repeated tokens and multi-byte chars
+    val seeded = stats.collect { case (id, Seq(r)) if id >= SeededIds => r }
+    assert(seeded.count(_.getAs[Double]("stop_ratio") > 0) > 500)
+    assert(seeded.count(r => r.getAs[Int]("n_distinct") < r.getAs[Int]("n_tokens")) > 20)
     assert(generatedTexts.count(_.exists(_ > '\u007F')) > 500)
+    // the final sigma row: οδος and οδοσ are two tokens, as Python counts
+    // them (the DuckDB oracle counts one: see TextOps.lowerSql)
+    val greek = stats(26L).head
+    assert((greek.getAs[Int]("n_tokens"), greek.getAs[Int]("n_distinct")) === ((3, 3)))
   }
 
   test("termCounts kernel == groupBy(doc_id, term).count() over cleanTokens on 5,000 seeded strings and their doubles") {
-    // each generated string also doubled, so that most kept terms repeat
-    val texts = generatedTexts ++ generatedTexts.map(t => t + " " + t)
-    val seeded = spark.createDataFrame(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) })
-      .toDF("doc_id", "text")
-    def byDoc(df: DataFrame): Map[Long, Seq[(String, Long)]] =
-      df.collect().toSeq.groupBy(_.getLong(0))
-        .map { case (id, rs) => id -> rs.map(r => (r.getString(1), r.getLong(2))).sorted }
-    for ((corpus, text) <- Seq(
-        docs -> docs.collect().map(r => r.getLong(0) -> r.getString(1)).toMap,
-        seeded -> texts.indices.map(i => i.toLong -> texts(i)).toMap)) {
-      val grouped = byDoc(corpus.select(col("doc_id"),
-          explode(TextOps.cleanTokens(col("text"))).as("term"))
+    // each seeded string also doubled, so that most kept terms repeat
+    val tf = judge(generatedTexts ++ generatedTexts.map(t => t + " " + t))(
+      _.select(col("doc_id"), inline(TextOps.termCounts(col("text")))),
+      _.select(col("doc_id"), explode(TextOps.cleanTokens(col("text"))).as("term"))
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
-      def check(): Unit = {
-        val kernel = byDoc(corpus.select(col("doc_id"), inline(TextOps.termCounts(col("text")))))
-        val mismatches = (kernel.keySet ++ grouped.keySet).toSeq.sorted
-          .filter(id => kernel.get(id) != grouped.get(id))
-        assert(mismatches.isEmpty, mismatches.take(5).map(id => s"${escaped(text(id))}: " +
-          s"kernel ${kernel.get(id)} != grouped ${grouped.get(id)}").mkString("\n"))
-      }
-      check()
-      withoutCodegen(check()) // the interpreted path calls the same kernel
-    }
     // the doubled strings reach the run counting: many terms with tf > 1
-    val repeated = seeded.select(inline(TextOps.termCounts(col("text")))).where(col("tf") > 1)
-    assert(repeated.count() > 1000)
+    assert(tf.values.flatten.count(_.getLong(2) > 1) > 1000)
   }
 
   test("only U+0130 and U+212A lower to anything ASCII, with ICU case mapping on and off") {
@@ -384,7 +357,7 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
         val mismatches = texts.zip(loweredTexts).filter { case (t, l) =>
           marked(TextOps.lowerRaw(UTF8String.fromString(t))) != marked(l.getBytes(StandardCharsets.UTF_8))
         }
-        assert(mismatches.isEmpty, s"$icu: " + mismatches.take(5).map(m => escaped(m._1.take(200))).mkString("\n"))
+        assert(mismatches.isEmpty, s"$icu: " + mismatches.take(5).map(m => escaped(m._1)).mkString("\n"))
       } finally spark.conf.unset("spark.sql.icu.caseMappings.enabled")
     }
   }
@@ -415,27 +388,14 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       2 -> Gen.oneOf(" ", "\t", "\n", "  "))
     val texts = Gen.listOfN(5000, Gen.choose(0, 12).flatMap(n => Gen.listOfN(n, fragment).map(_.mkString)))
       .pureApply(Gen.Parameters.default, Seed(20261019L))
-    val seeded = spark.createDataFrame(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) })
-      .toDF("doc_id", "text")
-    def hits(df: DataFrame, hit: Column): Map[Long, Any] =
-      df.select(col("doc_id"), hit).collect().map(r => r.getLong(0) -> r.get(1)).toMap
-    for (corpus <- Seq(docs, seeded)) {
-      val text = corpus.select(col("doc_id"), col("text")).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      val branches = hits(corpus, CorpusOps.Keywords.map(lower(col("text")).contains(_)).reduce(_ || _))
-      def check(): Unit = {
-        val kernel = hits(corpus, CorpusOps.keywordHit(col("text")))
-        val mismatches = branches.keys.toSeq.sorted.filter(id => kernel(id) != branches(id))
-        assert(mismatches.isEmpty, mismatches.take(5).map(id =>
-          s"${escaped(text(id))}: kernel ${kernel(id)} != lower+contains ${branches(id)}").mkString("\n"))
-      }
-      check()
-      withoutCodegen(check()) // the interpreted path calls the same kernel
-    }
-    // the corpus reaches hits, misses, and hits that only the Kelvin sign makes
-    val hit = hits(seeded, CorpusOps.keywordHit(col("text")))
-    assert(hit.values.count(_ == true) > 500 && hit.values.count(_ == false) > 500)
+    val hits = judge(texts)(
+      _.select(col("doc_id"), CorpusOps.keywordHit(col("text")).as("hit")),
+      _.select(col("doc_id"), CorpusOps.Keywords.map(lower(col("text")).contains(_)).reduce(_ || _).as("hit")))
+    // the seeded strings reach hits, misses, and hits that only the Kelvin sign makes
+    val hit = texts.indices.map(i => hits(SeededIds + i).head.get(1))
+    assert(hit.count(_ == true) > 500 && hit.count(_ == false) > 500)
     def asciiLower(t: String): String = t.map(c => if (c >= 'A' && c <= 'Z') (c + 32).toChar else c)
-    assert(texts.indices.count(i => hit(i.toLong) == true &&
+    assert(texts.indices.count(i => hit(i) == true &&
       !CorpusOps.Keywords.exists(asciiLower(texts(i)).contains(_))) > 20)
     // the edge rows: SPAR\u212A is kept, W\u0130NDOW is not
     val kept = CorpusOps.keywordFilter(docs).collect().map(_.getLong(0)).toSet
@@ -443,48 +403,10 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("wordCounts Generate-barrier == plain select+filter formulation") {
-    val plain = docs.select(col("doc_id"),
-        TextOps.wordCount(col("text")).as("word_count"))
-      .filter(col("word_count") > 0)
-    assertSameResult(CorpusOps.wordCounts(docs), plain)
+    val counts = judge(generatedTexts)(CorpusOps.wordCounts, _.select(col("doc_id"),
+      TextOps.wordCount(col("text")).as("word_count")).filter(col("word_count") > 0))
     // empty / stopword-only docs (2, 6, 7) must be dropped
-    val kept = CorpusOps.wordCounts(docs).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(!kept.contains(2L) && !kept.contains(6L) && !kept.contains(7L))
-  }
-
-  test("docStats kernel == transform+aggregate formulation") {
-    assertSameResult(CorpusOps.docStats(docs), plainDocStats(docs))
-    // the final sigma row: οδος and οδοσ are two tokens, as Python counts
-    // them (the DuckDB oracle counts one: see TextOps.lowerSql)
-    val greek = CorpusOps.docStats(docs).where(col("doc_id") === 26L).head()
-    assert((greek.getAs[Int]("n_tokens"), greek.getAs[Int]("n_distinct")) === ((3, 3)))
-  }
-
-  test("docStats kernel == regex sum_len two-level formulation") {
-    // the r21 shape: toks/sum_len staged once, but n_stop/n_tokens expanded
-    // inline in the output Project (n_stop twice)
-    val lt = lower(col("text"))
-    val base = docs.select(
-      col("doc_id"),
-      length(col("text")).as("n_chars"),
-      filter(split(lt, TextOps.WsRe), (t: Column) => t =!= "").as("toks"),
-      length(regexp_replace(lt, TextOps.WsRe, "")).as("sum_len"))
-    val nTok = size(col("toks"))
-    val nStop = size(filter(col("toks"),
-      (t: Column) => t.isin(TextOps.NltkStopwords: _*)))
-    val reference = base.select(
-      col("doc_id"), col("n_chars"), nTok.as("n_tokens"),
-      size(array_distinct(col("toks"))).as("n_distinct"),
-      when(nTok > 0, round(col("sum_len").cast("double") / nTok, 4)).otherwise(0.0)
-        .as("avg_token_len"),
-      when(nTok > 0, round(nStop.cast("double") / nTok, 4)).otherwise(0.0)
-        .as("stop_ratio"),
-      when(nTok > 0,
-        round(least(lit(1.0), nTok.cast("double") / 50.0) *
-          (lit(1.0) - nStop.cast("double") / nTok), 4)).otherwise(0.0)
-        .as("quality_score"))
-    assertSameResult(CorpusOps.docStats(docs), reference)
+    assert(!counts.contains(2L) && !counts.contains(6L) && !counts.contains(7L))
   }
 
   test("termDocFreq per-row tf == groupBy(doc_id, term) tf joined with countDistinct and Window df") {
@@ -551,37 +473,16 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("input-sorted queries sort their (doc_id, text) input: no regex under the range exchange") {
     for (name <- Seq("clean_text", "word_count", "doc_stats", "doc_fingerprint", "term_doc_freq")) {
       val ops = executedOperators(SparkEntry.queries(name)(spark, docsParquet))
-      // its kernel runs, above the exchange
-      assert(anyExpression(ops)(isKernel), name)
       val rangeExchanges = ops
         .collect { case e: ShuffleExchangeExec
           if e.outputPartitioning.isInstanceOf[RangePartitioning] => e }
       assert(rangeExchanges.size === 1, name)
+      // its kernel (the plan table counts its calls) runs above the exchange
       val child = rangeExchanges.head.child
       assert(!anyExpression(operators(child))(_.isInstanceOf[RegExpReplace]), name)
       assert(!anyExpression(operators(child))(isKernel), name)
       assert(child.output.map(_.name) === Seq("doc_id", "text"), name)
     }
-  }
-
-  test("clean-chain queries run the kernel: no ArrayFilter, StringSplit or RegExpReplace") {
-    for (name <- Seq("clean_text", "word_freq_top200", "term_doc_freq", "dedup_exact")) {
-      val ops = executedOperators(SparkEntry.queries(name)(spark, docsParquet))
-      assert(anyExpression(ops)(isKernel), name)
-      assert(!anyExpression(ops)(e => e.isInstanceOf[ArrayFilter] ||
-        e.isInstanceOf[StringSplit] || e.isInstanceOf[RegExpReplace]), name)
-    }
-  }
-
-  test("doc_stats plan: one statsLowered, no ArrayFilter/split/regex") {
-    val ops = executedOperators(SparkEntry.queries("doc_stats")(spark, docsParquet))
-    assert(!anyExpression(ops)(e => e.isInstanceOf[ArrayFilter] ||
-      e.isInstanceOf[StringSplit] || e.isInstanceOf[RegExpReplace]))
-    // CollapseProject must not inline the struct once per field
-    assert(calls(ops, "statsLowered") === 1)
-    // word_count's Generate barrier: its Filter does not call the kernel again
-    for (dir <- Seq(docsParquet, docsOneFile)) assert(calls(executedOperators(
-      SparkEntry.queries("word_count")(spark, dir)), "cleanRaw") === 1, dir)
   }
 
   test("declared documents schema == the schema Spark infers from the fixture") {
@@ -601,32 +502,65 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     "hash_agg" -> (_.isInstanceOf[HashAggregateExec]))
 
   test("plan shapes: per-query physical operator counts == the table") {
-    // final AQE plan over docsParquet, one count per kind above, in order
-    val expected: Map[String, Seq[Int]] = Map(
-      "word_freq_top20"  -> Seq(1, 1, 1, 0, 0, 0, 0, 2),
-      "word_freq_top200" -> Seq(1, 1, 1, 0, 0, 0, 0, 2),
-      "clean_text"       -> Seq(1, 0, 1, 0, 0, 0, 1, 0),
-      "word_count"       -> Seq(1, 1, 1, 0, 0, 0, 1, 0),
-      "keyword_filter"   -> Seq(1, 0, 1, 0, 0, 0, 1, 0),
-      "doc_stats"        -> Seq(1, 0, 1, 0, 0, 0, 1, 0),
-      "lang_dist"        -> Seq(1, 0, 2, 0, 0, 0, 1, 2),
-      "doc_fingerprint"  -> Seq(1, 0, 1, 0, 0, 0, 1, 0),
-      "dedup_exact"      -> Seq(1, 0, 2, 0, 0, 0, 1, 2),
-      "term_doc_freq"    -> Seq(1, 2, 2, 1, 1, 0, 3, 2))
-    val actual = SparkEntry.queries.map { case (name, fn) =>
-      val ops = executedOperators(fn(spark, docsParquet))
-      name -> kinds.map { case (_, isKind) => ops.count(isKind) }
-    }
+    // The final (post-AQE) plan of each query over docsParquet (several
+    // splits), then over docsOneFile (one split): the count of each of
+    // `kinds`, then the calls of each of `Kernels`, in order. On one split
+    // the one partition satisfies every sort, aggregate and window, so no
+    // query has an exchange, each sorts only its output, and term_doc_freq
+    // counts df with a window in the task. On several, term_doc_freq's tf
+    // and df branches each run its kernel above the reused input exchange.
+    val expected: Map[String, (Seq[Int], Seq[Int])] = Map(
+      "word_freq_top20"  -> ((Seq(1, 1, 1, 0, 0, 0, 0, 2, 1, 0, 0, 0),
+                              Seq(1, 1, 0, 0, 0, 0, 0, 2, 1, 0, 0, 0))),
+      "word_freq_top200" -> ((Seq(1, 1, 1, 0, 0, 0, 0, 2, 1, 0, 0, 0),
+                              Seq(1, 1, 0, 0, 0, 0, 0, 2, 1, 0, 0, 0))),
+      "clean_text"       -> ((Seq(1, 0, 1, 0, 0, 0, 1, 0, 1, 0, 0, 0),
+                              Seq(1, 0, 0, 0, 0, 0, 1, 0, 1, 0, 0, 0))),
+      // the Generate barrier: word_count's Filter does not call cleanRaw again
+      "word_count"       -> ((Seq(1, 1, 1, 0, 0, 0, 1, 0, 1, 0, 0, 0),
+                              Seq(1, 1, 0, 0, 0, 0, 1, 0, 1, 0, 0, 0))),
+      "keyword_filter"   -> ((Seq(1, 0, 1, 0, 0, 0, 1, 0, 0, 0, 0, 1),
+                              Seq(1, 0, 0, 0, 0, 0, 1, 0, 0, 0, 0, 1))),
+      // CollapseProject must not inline the stats struct once per field
+      "doc_stats"        -> ((Seq(1, 0, 1, 0, 0, 0, 1, 0, 0, 1, 0, 0),
+                              Seq(1, 0, 0, 0, 0, 0, 1, 0, 0, 1, 0, 0))),
+      "lang_dist"        -> ((Seq(1, 0, 2, 0, 0, 0, 1, 2, 0, 0, 0, 0),
+                              Seq(1, 0, 0, 0, 0, 0, 1, 2, 0, 0, 0, 0))),
+      "doc_fingerprint"  -> ((Seq(1, 0, 1, 0, 0, 0, 1, 0, 1, 0, 0, 0),
+                              Seq(1, 0, 0, 0, 0, 0, 1, 0, 1, 0, 0, 0))),
+      "dedup_exact"      -> ((Seq(1, 0, 2, 0, 0, 0, 1, 2, 1, 0, 0, 0),
+                              Seq(1, 0, 0, 0, 0, 0, 1, 2, 1, 0, 0, 0))),
+      "term_doc_freq"    -> ((Seq(1, 2, 2, 1, 1, 0, 3, 2, 0, 0, 2, 0),
+                              Seq(1, 1, 0, 0, 0, 1, 2, 0, 0, 0, 1, 0))))
+    val layouts = Seq(docsParquet, docsOneFile)
+    val plans = SparkEntry.queries.map { case (name, fn) =>
+      name -> layouts.map(dir => executedOperators(fn(spark, dir))) }
+    def counts(ops: Seq[SparkPlan]): Seq[Int] =
+      kinds.map { case (_, isKind) => ops.count(isKind) } ++ Kernels.map(calls(ops, _))
+    val actual = plans.map { case (name, Seq(several, one)) => name -> ((counts(several), counts(one))) }
     assert(actual.keySet === expected.keySet, actual)
-    for ((name, counts) <- actual)
-      assert(counts === expected(name), s"$name: ${kinds.map(_._1).zip(counts)}")
+    val columns = kinds.map(_._1) ++ Kernels
+    val wrong = actual.keys.toSeq.sorted.filter(name => actual(name) != expected(name))
+    assert(wrong.isEmpty, wrong.map { name => val (several, one) = actual(name)
+      s"$name: several ${columns.zip(several)}; one ${columns.zip(one)}" }.mkString("\n"))
+    for ((name, ops) <- plans.toSeq; (o, dir) <- ops.zip(layouts)) {
+      // the kernels replace the regex, split and filter built-ins
+      assert(!anyExpression(o)(e => e.isInstanceOf[ArrayFilter] ||
+        e.isInstanceOf[StringSplit] || e.isInstanceOf[RegExpReplace]), s"$name on $dir")
+      // only statsLowered takes Spark's lower; the ...Raw kernels lower raw text
+      assert(anyExpression(o)(_.isInstanceOf[Lower]) === (name == "doc_stats"), s"$name on $dir")
+      // column pruning reaches the scan, also through the one-split
+      // coalesce: no query reads `source`
+      for (scan <- o.collect { case s: FileSourceScanExec => s })
+        assert(!scan.requiredSchema.fieldNames.contains("source"), s"$name on $dir")
+    }
+    // and so does filter pushdown: keyword_filter's lang = 'en'
+    for (o <- plans("keyword_filter"); scan <- o.collect { case s: FileSourceScanExec => s })
+      assert(scan.dataFilters.exists(_.references.map(_.name).toSet == Set("lang")), scan.dataFilters)
   }
 
   test("term_doc_freq plan: one scan through the reused input exchange, no (doc_id, term) shuffle") {
-    val tdf = SparkEntry.queries("term_doc_freq")(spark, docsParquet)
-    assert(tdf.queryExecution.analyzed.collect { case h: ResolvedHint => h }.isEmpty)
-    val ops = executedOperators(tdf)
-    assert(ops.count(_.isInstanceOf[FileSourceScanExec]) === 1)
+    val ops = executedOperators(SparkEntry.queries("term_doc_freq")(spark, docsParquet))
     // df's branch reads tf's range exchange of (doc_id, text) again
     val reused = ops.collect { case r: ReusedExchangeExec => r.child }
     assert(reused.exists(e => e.outputPartitioning.isInstanceOf[RangePartitioning] &&
@@ -641,24 +575,21 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       case r: RangePartitioning => names(r.ordering).contains("term")
       case _ => false
     }, partitionings)
-    assert(!ops.exists(_.isInstanceOf[WindowExec]))
     assert(!ops.exists {
       case a: BaseAggregateExec => a.aggregateExpressions.exists(_.exists(_.isInstanceOf[CaseWhen]))
       case _ => false
     })
   }
 
-  test("docsParquet scans as several splits, docsOneFile as one") {
-    // the plan tests above pin the several-split plans only while this holds
+  test("docs' one-split decision from the file listing == toRdd.getNumPartitions <= 1") {
+    // the plan table pins the several-split plans only while docsParquet
+    // scans as several splits
     assert(scanPartitions(docsParquet) >= 2)
     assert(scanPartitions(docsOneFile) === 1)
-  }
-
-  test("docs' one-split decision from the file listing == toRdd.getNumPartitions <= 1") {
-    for (dir <- Seq(docsParquet, docsOneFile, docsTwoTinyFiles))
-      assert(SparkEntry.oneSplit(read(dir)) === (scanPartitions(dir) <= 1), dir)
     // two tiny files are two splits: each one costs spark.sql.files.openCostInBytes
     assert(scanPartitions(docsTwoTinyFiles) === 2)
+    for (dir <- Seq(docsParquet, docsOneFile, docsTwoTinyFiles))
+      assert(SparkEntry.oneSplit(read(dir)) === (scanPartitions(dir) <= 1), dir)
   }
 
   test("term_doc_freq without broadcast joins: the same rows in the same order, no BroadcastExchangeExec") {
@@ -673,35 +604,6 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(!ops.exists(_.isInstanceOf[BroadcastExchangeExec]), s"$dir: $ops")
       } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
-  }
-
-  test("one-split plan shapes: per-query operator counts == the table, no shuffle") {
-    // final plan over docsOneFile: the one partition satisfies every sort,
-    // aggregate and window, so no query has an exchange; each sorts only its
-    // output, and term_doc_freq counts df over a window in the task
-    val expected: Map[String, Seq[Int]] = Map(
-      "word_freq_top20"  -> Seq(1, 1, 0, 0, 0, 0, 0, 2),
-      "word_freq_top200" -> Seq(1, 1, 0, 0, 0, 0, 0, 2),
-      "clean_text"       -> Seq(1, 0, 0, 0, 0, 0, 1, 0),
-      "word_count"       -> Seq(1, 1, 0, 0, 0, 0, 1, 0),
-      "keyword_filter"   -> Seq(1, 0, 0, 0, 0, 0, 1, 0),
-      "doc_stats"        -> Seq(1, 0, 0, 0, 0, 0, 1, 0),
-      "lang_dist"        -> Seq(1, 0, 0, 0, 0, 0, 1, 2),
-      "doc_fingerprint"  -> Seq(1, 0, 0, 0, 0, 0, 1, 0),
-      "dedup_exact"      -> Seq(1, 0, 0, 0, 0, 0, 1, 2),
-      "term_doc_freq"    -> Seq(1, 1, 0, 0, 0, 1, 2, 0))
-    val ops = SparkEntry.queries.map { case (name, fn) =>
-      name -> executedOperators(fn(spark, docsOneFile)) }
-    val actual = ops.map { case (name, o) => name -> kinds.map { case (_, isKind) => o.count(isKind) } }
-    assert(actual.keySet === expected.keySet, actual)
-    for ((name, counts) <- actual)
-      assert(counts === expected(name), s"$name: ${kinds.map(_._1).zip(counts)}")
-    // column pruning reaches the scan through the coalesce: no query reads `source`
-    for ((name, o) <- ops; scan <- o.collect { case s: FileSourceScanExec => s })
-      assert(!scan.requiredSchema.fieldNames.contains("source"), name)
-    // and so does filter pushdown: keyword_filter's lang = 'en'
-    val kwScan = ops("keyword_filter").collect { case s: FileSourceScanExec => s }.head
-    assert(kwScan.dataFilters.exists(_.references.map(_.name).toSet == Set("lang")), kwScan.dataFilters)
   }
 
   test("one-split plans: the five queries with no exchange plan without AQE, the aggregating ones keep it") {
@@ -743,12 +645,11 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("one-split term_doc_freq counts df with a window in the task: one scan, no join, one job") {
     val tdf = SparkEntry.queries("term_doc_freq")(spark, docsOneFile)
     assert(jobsOf(tdf.collect()) === 1)
+    // the plan table counts its scan, window, exchanges and kernel calls
     val ops = operators(tdf.queryExecution.executedPlan)
-    assert(ops.count(_.isInstanceOf[FileSourceScanExec]) === 1, ops)
-    assert(calls(ops, "termCountsRaw") === 1, ops)
-    val windows = ops.collect { case w: WindowExec => w }
-    assert(windows.map(_.partitionSpec.flatMap(_.references.map(_.name))) === Seq(Seq("term")), ops)
-    assert(!ops.exists(o => o.isInstanceOf[BaseJoinExec] || o.isInstanceOf[Exchange]), ops)
+    val windows = ops.collect { case w: WindowExec => w.partitionSpec.flatMap(_.references.map(_.name)) }
+    assert(windows.forall(_ == Seq("term")), ops)
+    assert(!ops.exists(_.isInstanceOf[BaseJoinExec]), ops)
   }
 
   test("one-split term_doc_freq spills its window buffer: the same rows in the same order") {
@@ -760,7 +661,7 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(tdf.collect().toSeq === inMemory)
       val spilled = operators(tdf.queryExecution.executedPlan)
         .collect { case w: WindowExec => w.metrics("spillSize").value }
-      assert(spilled.size === 1 && spilled.head > 0, spilled)
+      assert(spilled.nonEmpty && spilled.forall(_ > 0), spilled)
     } finally {
       spark.conf.unset("spark.sql.windowExec.buffer.in.memory.threshold")
       spark.conf.unset("spark.sql.windowExec.buffer.spill.threshold")
