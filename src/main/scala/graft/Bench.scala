@@ -11,9 +11,9 @@ import graft.functions.TextOps
   *
   *  - The timed action is a noop-sink write: `count()` lets the optimizer
   *    prune computed columns, so a projection would time an empty scan.
-  *  - An untimed warmup runs first, on synthetic text plus one bare count
-  *    of the input, so that no query absorbs executor start-up, scan
-  *    init, codegen and JIT. Nothing from it is reused by a timed run.
+  *  - An untimed warmup runs first, on synthetic text plus one count of
+  *    [[SparkEntry.documents]], so that no query absorbs executor start-up,
+  *    scan init, codegen and JIT. Nothing from it is reused by a timed run.
   *  - Each query's time is the minimum of three runs, taken in three
   *    interleaved passes over the query list, so that one CPU-steal window
   *    can spoil at most one of a query's samples.
@@ -63,7 +63,7 @@ object Bench {
       .orderBy(desc("c"), asc("w")).limit(20)
       .write.format("noop").mode("overwrite").save()
     spark.sparkContext.setJobDescription("warmup: input scan init")
-    spark.read.parquet(s"$sfDir/documents.parquet").count()
+    SparkEntry.documents(spark, sfDir).count()
 
     // ---- timed section ----
     // Three full interleaved passes over the sorted query list; per-query

@@ -24,25 +24,25 @@ object SparkEntry {
   private[graft] val DocumentsSchema: StructType = StructType.fromDDL(
     "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
 
-  /** `documents`, read through [[DocumentsSchema]], and whether it is one
-    * partition. A table that Spark plans as one split comes back as
-    * `coalesce(1)`, which reports a single partition: then every edge sort
-    * and aggregate is satisfied as it is, and no query plans a shuffle or a
-    * range-sampling re-scan. The rule cannot take scan parallelism away: it
-    * fires only where the scan is one task already, and Spark splits a file
-    * of more than about `max(spark.sql.files.openCostInBytes, bytes / cores)`
-    * into several. Column pruning and filter pushdown pass through the
-    * coalesce. */
-  private def docs(s: SparkSession, dir: String): (DataFrame, Boolean) = {
+  /** `documents`, read through [[DocumentsSchema]]. A table that Spark
+    * plans as one split comes back as `coalesce(1)`, which reports a single
+    * partition: then every edge sort and aggregate is satisfied as it is,
+    * and no query plans a shuffle or a range-sampling re-scan. The rule
+    * cannot take scan parallelism away: it fires only where the scan is one
+    * task already, and Spark splits a file of more than about
+    * `max(spark.sql.files.openCostInBytes, bytes / cores)` into several.
+    * Column pruning and filter pushdown pass through the coalesce;
+    * [[TfIdfOps.onePartition]] tells the two layouts apart. */
+  def documents(s: SparkSession, dir: String): DataFrame = {
     val d = s.read.schema(DocumentsSchema).parquet(s"$dir/documents.parquet")
-    if (oneSplit(d)) (d.coalesce(1), true) else (d, false)
+    if (oneSplit(d)) d.coalesce(1) else d
   }
 
   /** Whether Spark plans the file read `d` as at most one split. It counts
     * the splits as `FileSourceScanExec` does, with the same three calls, on
     * the file listing that the read's relation cached: no second planning
     * of the read, no file-system call, no job. */
-  private[graft] def oneSplit(d: DataFrame): Boolean = d.queryExecution.analyzed match {
+  private def oneSplit(d: DataFrame): Boolean = d.queryExecution.analyzed match {
     case LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
       val listing = r.location.listFiles(Nil, Nil)
       val maxSplitBytes = FilePartition.maxSplitBytes(r.sparkSession, listing)
@@ -61,23 +61,23 @@ object SparkEntry {
   private case object SortOutput extends Edge
   private case object SortBoth extends Edge
 
-  private case class Query(name: String, plan: (DataFrame, Boolean) => DataFrame, sql: String,
+  private case class Query(name: String, plan: DataFrame => DataFrame, sql: String,
       keys: Seq[String] = Nil, edge: Edge = SortOutput) {
-    /** [[plan]] over `d`, sorted by [[keys]] as [[table]]'s edge rule says;
-      * `one` says whether `d` is one partition. */
-    def sorted(d: DataFrame, one: Boolean): DataFrame = (keys.map(col), one, edge) match {
-      case (Seq(), _, _) => plan(d, one)
-      case (k, true, _) => plan(d, one).sortWithinPartitions(k: _*)
-      case (k, false, SortInput) => plan(d.orderBy(k.head), one)
-      case (k, false, SortOutput) => plan(d, one).orderBy(k: _*)
-      case (k, false, SortBoth) => plan(d.orderBy(k.head), one).orderBy(k: _*)
+    /** [[plan]] over `d`, sorted by [[keys]] as [[table]]'s edge rule says
+      * for `d`'s layout. */
+    def sorted(d: DataFrame): DataFrame = (keys.map(col), TfIdfOps.onePartition(d), edge) match {
+      case (Seq(), _, _) => plan(d)
+      case (k, true, _) => plan(d).sortWithinPartitions(k: _*)
+      case (k, false, SortInput) => plan(d.orderBy(k.head))
+      case (k, false, SortOutput) => plan(d).orderBy(k: _*)
+      case (k, false, SortBoth) => plan(d.orderBy(k.head)).orderBy(k: _*)
     }
     def sortedSql: String = if (keys.isEmpty) sql else s"$sql ORDER BY ${keys.mkString(", ")}"
   }
 
   /** One row per operator from SURVEY.md §2: its name, its plan over
-    * `documents` (told whether [[docs]] returned one partition), its DuckDB
-    * twin and the keys both are sorted by.
+    * `documents` as [[documents]] reads it, its DuckDB twin and the keys
+    * both are sorted by.
     *
     * Operators in `graft.operators`/`graft.functions` return UNSORTED
     * DataFrames, and their SQL twins unsorted rows (no library operator
@@ -102,47 +102,41 @@ object SparkEntry {
     * broadcast probe keep the `doc_id` range partitioning, so the output
     * needs only a local sort.
     *
-    * On one split [[docs]] returns one partition, and every query sorts its
-    * output in place, not its input: a plan of one-child operators keeps
-    * that partition, so `sortWithinPartitions` is a global order, and the
-    * five queries that do not aggregate plan without AQE. term_doc_freq
+    * On one split [[documents]] returns one partition, and every query
+    * sorts its output in place, not its input: a plan of one-child operators
+    * keeps that partition, so `sortWithinPartitions` is a global order, and
+    * the five queries that do not aggregate plan without AQE. term_doc_freq
     * counts df over a window in the task ([[TfIdfOps.termDocFreq]]). No
     * query has an exchange. The results, and their order, are the same on
     * both.
     */
   private val table: Seq[Query] = Seq(
     // A7/T2/T3 + P1-P5,P7,F3,F4: global word frequency, chart top-20.
-    Query("word_freq_top20", (d, _) => TextOps.wordFreq(d, 20), TextOps.wordFreqSql(20)),
+    Query("word_freq_top20", TextOps.wordFreq(_, 20), TextOps.wordFreqSql(20)),
     // A7/T2: the reference's full top-200 result table (app.py:169).
-    Query("word_freq_top200", (d, _) => TextOps.wordFreq(d, 200), TextOps.wordFreqSql(200)),
+    Query("word_freq_top200", TextOps.wordFreq(_, 200), TextOps.wordFreqSql(200)),
     // P1-P5,P7,F3,F4: the clean_text projection (app.py:46-57).
-    Query("clean_text", (d, _) => CorpusOps.cleanTexts(d), CorpusOps.cleanTextsSql, Seq("doc_id"), SortInput),
+    Query("clean_text", CorpusOps.cleanTexts, CorpusOps.cleanTextsSql, Seq("doc_id"), SortInput),
     // P8+F2: derived word count, empty docs dropped (app.py:115,117).
-    Query("word_count", (d, _) => CorpusOps.wordCounts(d), CorpusOps.wordCountsSql, Seq("doc_id"), SortInput),
+    Query("word_count", CorpusOps.wordCounts, CorpusOps.wordCountsSql, Seq("doc_id"), SortInput),
     // F1+T4: keyword OR predicate + lang filter (app.py:83-89).
-    Query("keyword_filter", (d, _) => CorpusOps.keywordFilter(d), CorpusOps.keywordFilterSql,
-      Seq("doc_id")),
+    Query("keyword_filter", CorpusOps.keywordFilter, CorpusOps.keywordFilterSql, Seq("doc_id")),
     // Text-quality scoring (north-star corpus filtering).
-    Query("doc_stats", (d, _) => CorpusOps.docStats(d), CorpusOps.docStatsSql, Seq("doc_id"), SortInput),
+    Query("doc_stats", CorpusOps.docStats, CorpusOps.docStatsSql, Seq("doc_id"), SortInput),
     // Corpus stats per language (exact bigint sums).
-    Query("lang_dist", (d, _) => CorpusOps.langDist(d), CorpusOps.langDistSql, Seq("lang")),
+    Query("lang_dist", CorpusOps.langDist, CorpusOps.langDistSql, Seq("lang")),
     // Document fingerprinting (md5 of cleaned text).
-    Query("doc_fingerprint", (d, _) => CorpusOps.fingerprints(d), CorpusOps.fingerprintsSql,
-      Seq("doc_id"), SortInput),
+    Query("doc_fingerprint", CorpusOps.fingerprints, CorpusOps.fingerprintsSql, Seq("doc_id"), SortInput),
     // Exact dedup: deterministic survivor + dup count per fingerprint.
-    Query("dedup_exact", (d, _) => CorpusOps.dedupExact(d), CorpusOps.dedupExactSql, Seq("keep_id")),
+    Query("dedup_exact", CorpusOps.dedupExact, CorpusOps.dedupExactSql, Seq("keep_id")),
     // A2+A3: per-doc term frequency ⋈ per-term document frequency — the
     // relational spine of TF-IDF (app.py:156-157).
-    Query("term_doc_freq", (d, one) => TfIdfOps.termDocFreq(d, one), TfIdfOps.termDocFreqSql,
-      Seq("doc_id", "term"), SortBoth)
+    Query("term_doc_freq", TfIdfOps.termDocFreq, TfIdfOps.termDocFreqSql, Seq("doc_id", "term"), SortBoth)
   )
 
-  /** Each query's plan over `documents` as [[docs]] reads it from `dir`. */
+  /** Each query's plan over `documents` as [[documents]] reads it from `dir`. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    table.map(q => q.name -> ((s: SparkSession, dir: String) => {
-      val (d, one) = docs(s, dir)
-      q.sorted(d, one)
-    })).toMap
+    table.map(q => q.name -> ((s: SparkSession, dir: String) => q.sorted(documents(s, dir)))).toMap
 
   /** Each query's DuckDB twin, run on the same parquet tables. */
   def oracleSql: Map[String, String] = table.map(q => q.name -> q.sortedSql).toMap

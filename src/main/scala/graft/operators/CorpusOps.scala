@@ -63,7 +63,7 @@ object CorpusOps {
     * through `explode(array(...))`, a one-row Generate, only as an optimizer
     * barrier: a plain `select(wc).filter(wc > 0)` has the predicate
     * substituted through the projection, and its plan calls the
-    * [[TextOps.cleanRaw]] kernel 3 times. A predicate on generator output
+    * [[TextOps.cleanRaw]] kernel twice. A predicate on generator output
     * is not pushed below the Generate, so this shape calls it once. */
   def wordCounts(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),

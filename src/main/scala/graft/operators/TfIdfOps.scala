@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextOps
@@ -20,17 +21,26 @@ import graft.functions.TextOps
   * joined back to tf: the planner broadcasts df while it is under
   * `spark.sql.autoBroadcastJoinThreshold`; past that it sort-merge joins,
   * and AQE's skew-join rule can split a hot term's partitions. Over one
-  * partition (`onePartition`: the caller read `docs` as one) the table is
-  * one task already, so df is a count over a window on `term`: tf is read
-  * once, sorted by term and counted in place, with no aggregate, no join
-  * and one job. The window holds one term's rows at a time, in a buffer
-  * that spills to disk, so a hot term need not fit in task memory. */
+  * partition (`docs` is [[onePartition]]) the table is one task already,
+  * so df is a count over a window on `term`: tf is read once, sorted by
+  * term and counted in place, with no aggregate, no join and one job. The
+  * window holds one term's rows at a time, in a buffer that spills to disk,
+  * so a hot term need not fit in task memory. */
 object TfIdfOps {
-  def termDocFreq(docs: DataFrame, onePartition: Boolean = false): DataFrame = {
+  def termDocFreq(docs: DataFrame): DataFrame = {
     val tf = docs.select(col("doc_id"), inline(TextOps.termCounts(col("text"))))
-    if (onePartition) tf.withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
+    if (onePartition(docs)) tf.withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
     else tf.join(tf.groupBy("term").agg(count(lit(1)).as("df")), "term")
       .select("doc_id", "term", "tf", "df")
+  }
+
+  /** Whether `df` is one partition by its own plan: its root is
+    * `coalesce(1)` or `repartition(1)`, as [[graft.SparkEntry.documents]]
+    * returns a one-split table. The plan is analyzed already, so this plans
+    * nothing and starts no job. */
+  def onePartition(df: DataFrame): Boolean = df.queryExecution.analyzed match {
+    case Repartition(1, _, _) => true
+    case _ => false
   }
 
   val termDocFreqSql: String =

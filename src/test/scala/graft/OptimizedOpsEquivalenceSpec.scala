@@ -141,7 +141,8 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     dir
   }
 
-  /** The `documents` table under `dir`, read as [[SparkEntry]] reads it. */
+  /** The `documents` table under `dir`, read as [[SparkEntry.documents]]
+    * reads it before it decides on `coalesce(1)`. */
   private def read(dir: String): DataFrame =
     spark.read.schema(SparkEntry.DocumentsSchema).parquet(s"$dir/documents.parquet")
 
@@ -415,21 +416,28 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val dfreq = toks.groupBy("term").agg(countDistinct("doc_id").as("df"))
     val reference = tf.join(dfreq, "term").select("doc_id", "term", "tf", "df")
-    assertSameResult(TfIdfOps.termDocFreq(docs), reference)
-    // the same schema as the explode-and-group shape, nullability included
-    assert(TfIdfOps.termDocFreq(docs).schema === reference.schema)
-    assert(SparkEntry.queries("term_doc_freq")(spark, docsParquet).schema === StructType.fromDDL(
-      "doc_id BIGINT, term STRING NOT NULL, tf BIGINT NOT NULL, df BIGINT NOT NULL"))
-    // and against the r21 window formulation (count over partition by term)
+    // and the r21 window formulation (count over partition by term)
     val windowRef = tf.withColumn("df",
         count(lit(1)).over(Window.partitionBy("term")))
       .select("doc_id", "term", "tf", "df")
-    assertSameResult(TfIdfOps.termDocFreq(docs), windowRef)
-    // shared term across docs 8 and 9 must have df = 2
-    val dup = TfIdfOps.termDocFreq(docs)
-      .where(col("term") === "duplicate").select("df")
-      .collect().map(_.getLong(0)).toSet
-    assert(dup === Set(2L))
+    // docs joins df back to tf; docs.coalesce(1) is one partition, and
+    // counts df with a window
+    for ((input, windowed) <- Seq(docs -> false, docs.coalesce(1) -> true)) {
+      val tdf = TfIdfOps.termDocFreq(input)
+      assertSameResult(tdf, reference)
+      assertSameResult(tdf, windowRef)
+      // the same schema as the explode-and-group shape, nullability included
+      assert(tdf.schema === reference.schema)
+      val ops = executedOperators(tdf)
+      assert(ops.exists(_.isInstanceOf[WindowExec]) === windowed, ops)
+      assert(ops.exists(_.isInstanceOf[BaseJoinExec]) === !windowed, ops)
+      // shared term across docs 8 and 9 must have df = 2
+      val dup = tdf.where(col("term") === "duplicate").select("df")
+        .collect().map(_.getLong(0)).toSet
+      assert(dup === Set(2L))
+    }
+    assert(SparkEntry.queries("term_doc_freq")(spark, docsParquet).schema === StructType.fromDDL(
+      "doc_id BIGINT, term STRING NOT NULL, tf BIGINT NOT NULL, df BIGINT NOT NULL"))
   }
 
   test("dedupExact groups identical cleaned text across langs deterministically") {
@@ -581,7 +589,7 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     })
   }
 
-  test("docs' one-split decision from the file listing == toRdd.getNumPartitions <= 1") {
+  test("onePartition(documents) == toRdd.getNumPartitions <= 1") {
     // the plan table pins the several-split plans only while docsParquet
     // scans as several splits
     assert(scanPartitions(docsParquet) >= 2)
@@ -589,7 +597,7 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // two tiny files are two splits: each one costs spark.sql.files.openCostInBytes
     assert(scanPartitions(docsTwoTinyFiles) === 2)
     for (dir <- Seq(docsParquet, docsOneFile, docsTwoTinyFiles))
-      assert(SparkEntry.oneSplit(read(dir)) === (scanPartitions(dir) <= 1), dir)
+      assert(TfIdfOps.onePartition(SparkEntry.documents(spark, dir)) === (scanPartitions(dir) <= 1), dir)
   }
 
   test("term_doc_freq without broadcast joins: the same rows in the same order, no BroadcastExchangeExec") {
