@@ -54,23 +54,16 @@ object SparkEntry {
       FilePartition.getFilePartitions(r.sparkSession, splits, maxSplitBytes).size <= 1
   }
 
-  /** Where the edge sorts a query by its keys on several splits: its
-    * input (by the first key), its output, or both (see [[table]]). */
-  private sealed trait Edge
-  private case object SortInput extends Edge
-  private case object SortOutput extends Edge
-  private case object SortBoth extends Edge
-
   private case class Query(name: String, plan: DataFrame => DataFrame, sql: String,
-      keys: Seq[String] = Nil, edge: Edge = SortOutput) {
+      keys: Seq[String] = Nil) {
     /** [[plan]] over `d`, sorted by [[keys]] as [[table]]'s edge rule says
       * for `d`'s layout. */
-    def sorted(d: DataFrame): DataFrame = (keys.map(col), TfIdfOps.onePartition(d), edge) match {
-      case (Seq(), _, _) => plan(d)
-      case (k, true, _) => plan(d).sortWithinPartitions(k: _*)
-      case (k, false, SortInput) => plan(d.orderBy(k.head))
-      case (k, false, SortOutput) => plan(d).orderBy(k: _*)
-      case (k, false, SortBoth) => plan(d.orderBy(k.head)).orderBy(k: _*)
+    def sorted(d: DataFrame): DataFrame = keys.map(col) match {
+      case Seq() => plan(d)
+      case k if TfIdfOps.onePartition(d) => plan(d).sortWithinPartitions(k: _*)
+      case k if keys.head != "doc_id" => plan(d).orderBy(k: _*)
+      case Seq(id) => plan(d.orderBy(id))
+      case k => plan(d.orderBy(k.head)).orderBy(k: _*)
     }
     def sortedSql: String = if (keys.isEmpty) sql else s"$sql ORDER BY ${keys.mkString(", ")}"
   }
@@ -88,19 +81,21 @@ object SparkEntry {
     * frequency has no keys: it orders and limits inside the operator, on
     * both sides.
     *
-    * Edge rule on several splits: a per-row projection sorts its narrow
-    * INPUT, not its output. A global sort is a range-partition exchange, and
-    * range sampling runs the exchange's child once to pick the bounds and
-    * again for the shuffle. Sorting `(doc_id, text)` first leaves only the
-    * scan under the exchange; Project, Generate and Filter keep their
-    * input's order, so the clean chain runs once, after the exchange.
-    * Aggregating and filtering queries sort their (smaller) output, except
-    * term_doc_freq, which sorts both: its output is as wide as a per-row
-    * projection's, and it reads its input twice (tf, and df's aggregate).
-    * Sorting the input lets both branches share one range exchange of
-    * `(doc_id, text)`, which AQE reuses: one scan. tf's Generate and the
-    * broadcast probe keep the `doc_id` range partitioning, so the output
-    * needs only a local sort.
+    * On several splits the sort follows from the keys. A global sort is a
+    * range-partition exchange, and range sampling runs its child twice. A
+    * query keyed by `doc_id`, the `documents` key, sorts its input by it:
+    * only the scan runs under the exchange, plus keyword_filter's filter,
+    * pushed below it (it ships `(doc_id, lang)`). Project, Generate and
+    * Filter keep that order, so a projection's kernel runs once, above it.
+    * With more keys (term_doc_freq) it sorts its output too: tf and df share
+    * the one `(doc_id, text)` exchange, which AQE reuses, and the output sort
+    * runs over rows already in `doc_id` order. Any other keyed query
+    * aggregates and sorts its smaller output. Two simpler rules lost. An
+    * input and an output sort for every `doc_id` query: `EliminateSorts`
+    * drops the inner one through a Project, so clean_text's kernel runs
+    * under the exchange, twice. An unsorted `repartitionByRange` of the
+    * input plus an output sort: term_doc_freq's task CPU went from 3.592 s
+    * to 3.906 s (lower in 8 of 30 rounds; 8-file ×10 seed-7 `corpus_agg`).
     *
     * On one split [[documents]] returns one partition, and every query
     * sorts its output in place, not its input: a plan of one-child operators
@@ -116,22 +111,22 @@ object SparkEntry {
     // A7/T2: the reference's full top-200 result table (app.py:169).
     Query("word_freq_top200", TextOps.wordFreq(_, 200), TextOps.wordFreqSql(200)),
     // P1-P5,P7,F3,F4: the clean_text projection (app.py:46-57).
-    Query("clean_text", CorpusOps.cleanTexts, CorpusOps.cleanTextsSql, Seq("doc_id"), SortInput),
+    Query("clean_text", CorpusOps.cleanTexts, CorpusOps.cleanTextsSql, Seq("doc_id")),
     // P8+F2: derived word count, empty docs dropped (app.py:115,117).
-    Query("word_count", CorpusOps.wordCounts, CorpusOps.wordCountsSql, Seq("doc_id"), SortInput),
+    Query("word_count", CorpusOps.wordCounts, CorpusOps.wordCountsSql, Seq("doc_id")),
     // F1+T4: keyword OR predicate + lang filter (app.py:83-89).
     Query("keyword_filter", CorpusOps.keywordFilter, CorpusOps.keywordFilterSql, Seq("doc_id")),
     // Text-quality scoring (north-star corpus filtering).
-    Query("doc_stats", CorpusOps.docStats, CorpusOps.docStatsSql, Seq("doc_id"), SortInput),
+    Query("doc_stats", CorpusOps.docStats, CorpusOps.docStatsSql, Seq("doc_id")),
     // Corpus stats per language (exact bigint sums).
     Query("lang_dist", CorpusOps.langDist, CorpusOps.langDistSql, Seq("lang")),
     // Document fingerprinting (md5 of cleaned text).
-    Query("doc_fingerprint", CorpusOps.fingerprints, CorpusOps.fingerprintsSql, Seq("doc_id"), SortInput),
+    Query("doc_fingerprint", CorpusOps.fingerprints, CorpusOps.fingerprintsSql, Seq("doc_id")),
     // Exact dedup: deterministic survivor + dup count per fingerprint.
     Query("dedup_exact", CorpusOps.dedupExact, CorpusOps.dedupExactSql, Seq("keep_id")),
     // A2+A3: per-doc term frequency ⋈ per-term document frequency — the
     // relational spine of TF-IDF (app.py:156-157).
-    Query("term_doc_freq", TfIdfOps.termDocFreq, TfIdfOps.termDocFreqSql, Seq("doc_id", "term"), SortBoth)
+    Query("term_doc_freq", TfIdfOps.termDocFreq, TfIdfOps.termDocFreqSql, Seq("doc_id", "term"))
   )
 
   /** Each query's plan over `documents` as [[documents]] reads it from `dir`. */

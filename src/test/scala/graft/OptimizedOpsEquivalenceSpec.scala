@@ -185,11 +185,10 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     .map(_.collect { case s: StaticInvoke if s.functionName == kernel => s }.size).sum
 
   /** The reference's clean chain, one step per built-in: the three regex
-    * passes of the oracle's normalizeSqlExpr, then split and keepToken. */
+    * passes of TextOps.normalize (the oracle's normalizeSqlExpr), then
+    * tokenize and keepToken. */
   private def threePassTokens(text: Column): Column =
-    filter(split(regexp_replace(regexp_replace(regexp_replace(lower(text),
-      TextOps.UrlRe, ""), TextOps.MentionRe, ""), TextOps.NonAlphaRe, ""),
-      TextOps.WsRe), (t: Column) => TextOps.keepToken(t))
+    filter(TextOps.tokenize(TextOps.normalize(text)), (t: Column) => TextOps.keepToken(t))
 
   /** doc_stats as built-ins over Spark's own split: size, array_distinct,
     * an interpreted stopword filter and a transform+aggregate length sum. */
@@ -491,6 +490,13 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!anyExpression(operators(child))(isKernel), name)
       assert(child.output.map(_.name) === Seq("doc_id", "text"), name)
     }
+    // keyword_filter sorts its input too, and Spark pushes its filter below
+    // that sort: its one range exchange ships (doc_id, lang) of the kept rows
+    val ops = executedOperators(SparkEntry.queries("keyword_filter")(spark, docsParquet))
+    val Seq(exchange) = ops.collect { case e: ShuffleExchangeExec
+      if e.outputPartitioning.isInstanceOf[RangePartitioning] => e }
+    assert(exchange.child.output.map(_.name) === Seq("doc_id", "lang"))
+    assert(calls(operators(exchange.child), "keywordHitRaw") === 1)
   }
 
   test("declared documents schema == the schema Spark infers from the fixture") {

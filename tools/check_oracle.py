@@ -30,8 +30,11 @@ def main(sf_dir, out_dir):
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+        if os.path.isdir(p):  # a table of several files, as Spark writes one
+            p = os.path.join(p, "*.parquet")
+        elif not os.path.exists(p):
+            continue
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracles = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     n_pass = n_fail = 0
     for name, sql in sorted(oracles.items()):
