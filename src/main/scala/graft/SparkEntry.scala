@@ -1,10 +1,14 @@
 package graft
 
+import java.net.URI
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.execution.PartitionedFileUtil
-import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.StructType
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import graft.functions.TextOps
 import graft.operators.{CorpusOps, TfIdfOps}
 
@@ -25,33 +29,48 @@ object SparkEntry {
     "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
 
   /** `documents`, read through [[DocumentsSchema]]. A table that Spark
-    * plans as one split comes back as `coalesce(1)`, which reports a single
+    * plans as one split (`toRdd.getNumPartitions <= 1`: the scan is planned,
+    * no job runs) comes back as `coalesce(1)`, which reports a single
     * partition: then every edge sort and aggregate is satisfied as it is,
     * and no query plans a shuffle or a range-sampling re-scan. The rule
     * cannot take scan parallelism away: it fires only where the scan is one
     * task already, and Spark splits a file of more than about
     * `max(spark.sql.files.openCostInBytes, bytes / cores)` into several.
     * Column pruning and filter pushdown pass through the coalesce;
-    * [[TfIdfOps.onePartition]] tells the two layouts apart. */
-  def documents(s: SparkSession, dir: String): DataFrame = {
-    val d = s.read.schema(DocumentsSchema).parquet(s"$dir/documents.parquet")
-    if (oneSplit(d)) d.coalesce(1) else d
+    * [[TfIdfOps.onePartition]] tells the two layouts apart.
+    *
+    * The frame is kept per `(session, dir)`: a session lists the table,
+    * checks its columns ([[requireColumns]]) and decides its layout once.
+    * After that first read, new files or new `spark.sql.files.*` settings
+    * need a new session or a new directory, as Spark's catalog tables need
+    * `REFRESH TABLE`. A read that throws keeps nothing: a missing table
+    * fails on every call. */
+  def documents(s: SparkSession, dir: String): DataFrame = reads.synchronized {
+    reads.filterInPlace { case ((session, _), _) => !session.sparkContext.isStopped }
+    reads.getOrElseUpdate((s, dir), {
+      val d = s.read.schema(DocumentsSchema).parquet(s"$dir/documents.parquet")
+      requireColumns(d)
+      if (d.queryExecution.toRdd.getNumPartitions <= 1) d.coalesce(1) else d
+    })
   }
 
-  /** Whether Spark plans the file read `d` as at most one split. It counts
-    * the splits as `FileSourceScanExec` does, with the same three calls, on
-    * the file listing that the read's relation cached: no second planning
-    * of the read, no file-system call, no job. */
-  private def oneSplit(d: DataFrame): Boolean = d.queryExecution.analyzed match {
-    case LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
-      val listing = r.location.listFiles(Nil, Nil)
-      val maxSplitBytes = FilePartition.maxSplitBytes(r.sparkSession, listing)
-      val splits = listing.flatMap(dir => dir.files.flatMap { f =>
-        val path = f.getPath
-        PartitionedFileUtil.splitFiles(f, path,
-          r.fileFormat.isSplitable(r.sparkSession, r.options, path), maxSplitBytes, dir.values)
-      }).sortBy(-_.length)
-      FilePartition.getFilePartitions(r.sparkSession, splits, maxSplitBytes).size <= 1
+  /** [[documents]]' frames; a stopped session's go on the next call. */
+  private val reads = mutable.Map[(SparkSession, String), DataFrame]()
+
+  /** Throws unless the first file of the read `d` holds every column of
+    * [[DocumentsSchema]], by name and case-insensitively, as Spark resolves
+    * them: Spark's reader fills a requested column that a file lacks with
+    * NULLs, so a table without `text` would run every query to a wrong
+    * result. It reads that file's parquet footer on the driver, from the
+    * read's own file listing: no job. The other files of a table with
+    * several files stay unchecked. */
+  private def requireColumns(d: DataFrame): Unit = d.inputFiles.headOption.foreach { f =>
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new Path(new URI(f)), d.sparkSession.sparkContext.hadoopConfiguration))
+    val names = try reader.getFileMetaData.getSchema.getFields.asScala.map(_.getName)
+      finally reader.close()
+    val missing = DocumentsSchema.fieldNames.filterNot(c => names.exists(_.equalsIgnoreCase(c)))
+    require(missing.isEmpty, s"$f lacks the documents column(s): ${missing.mkString(", ")}")
   }
 
   private case class Query(name: String, plan: DataFrame => DataFrame, sql: String,

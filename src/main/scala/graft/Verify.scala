@@ -6,13 +6,14 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json, for the DuckDB compare. A query that throws non-fatally
-  * is named on stderr with its error class, and the rest still run. */
+  * is named on stderr with its error class, and the rest still run. The
+  * master is `spark-submit --master`'s, else `local[$SPARK_GRAFT_CPUS]`. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+      .master(sys.props.getOrElse("spark.master", s"local[$cpus]"))
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -606,6 +606,26 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(TfIdfOps.onePartition(SparkEntry.documents(spark, dir)) === (scanPartitions(dir) <= 1), dir)
   }
 
+  test("documents is read once per session: the same frame on every call") {
+    for (dir <- Seq(docsParquet, docsOneFile, docsTwoTinyFiles)) {
+      assert(SparkEntry.documents(spark, dir) eq SparkEntry.documents(spark, dir), dir)
+      assert(SparkEntry.documents(spark.newSession(), dir) ne SparkEntry.documents(spark, dir), dir)
+    }
+  }
+
+  test("a documents table without text, or with text renamed to body, fails every query naming text") {
+    val full = spark.read.parquet(s"$docsOneFile/documents.parquet")
+    for ((table, lacking) <- Seq("dropped" -> full.drop("text"),
+                                 "renamed" -> full.withColumnRenamed("text", "body"))) {
+      val dir = s"$dataDir/$table"
+      lacking.write.parquet(s"$dir/documents.parquet")
+      for (name <- SparkEntry.queries.keys) {
+        val e = intercept[IllegalArgumentException](SparkEntry.queries(name)(spark, dir).collect())
+        assert(e.getMessage.endsWith("lacks the documents column(s): text"), s"$name on $table")
+      }
+    }
+  }
+
   test("term_doc_freq without broadcast joins: the same rows in the same order, no BroadcastExchangeExec") {
     for (dir <- Seq(docsParquet, docsOneFile)) {
       val broadcast = SparkEntry.queries("term_doc_freq")(spark, dir).collect().toSeq
